@@ -6,14 +6,17 @@ reference drives via its runbook, mapped one-to-one:
 | ``run_batch_processor.sh`` → ``batch_processor.py`` (hourly cron) | ``python -m big_data_pr_spark batch`` |
 | ``stream_processor.py`` (3-query topology) | ``python -m big_data_pr_spark stream`` |
 | ES ILM 2-hour chart retention (``README.md:74-98``) | ``python -m big_data_pr_spark retention`` |
-| ``app.py`` serving API (5 endpoints → registry queries) | ``python -m big_data_pr_spark query <name>`` |
-| —                                         | ``python -m big_data_pr_spark list`` |
+| ``app.py`` serving API (Flask + ES)       | ``python -m big_data_pr_spark serve`` |
+| ``app.py`` /api/predict_xgboost           | ``python -m big_data_pr_spark forecast`` |
+| —                                         | ``python -m big_data_pr_spark query <name>`` / ``list`` |
 
-The serving layer is deliberately headless: every ``app.py`` endpoint
-exists as a named registry query (``realtime_stats_join``,
-``range_scan_limit``, ``ohlcv_candles_sma``, ``forecast_linear``,
-``distinct_*``) runnable against any sf_dir — an HTTP wrapper is a
-deployment detail, not an engine capability.
+``serve`` answers the ``app.py`` routes over the tables ``batch`` and
+``stream`` write, and may run beside them: ``hist``, ``latest`` and
+``stats`` are versioned tables (``operators/versioned.py``) read by
+their commit pointer, so a rewrite never shows a reader a missing or
+half-written table. The 423-query registry (``query``/``list``) also
+carries each endpoint's query shape (``realtime_stats_join``,
+``range_scan_limit``, ``ohlcv_candles_sma``, …) over the fixture data.
 """
 
 from __future__ import annotations
@@ -143,19 +146,15 @@ def cmd_forecast(args: argparse.Namespace) -> int:
     scaler = load_minmax_scaler(scaler_pkl)
     k = model.n_features_in_
     if args.hist:
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
+        from .ohlcv import serving
+        from .ohlcv.schemas import symbol_key
+        from .operators import versioned
         from .session import get_spark
 
-        spark = get_spark("forecast-cli")
-        rows = (
-            spark.read.parquet(args.hist)
-            .where(F.col("symbol") == args.symbol.replace("_", "/"))
-            .orderBy(F.desc("timestamp_dt"))
-            .limit(k)
-            .orderBy("timestamp_dt")
-            .collect()
-        )
+        hist = versioned.read_version(get_spark("forecast-cli"), args.hist)
+        rows = serving.model_input_topk(
+            hist, symbol_key(args.symbol, "hist"), "1h", k
+        ).collect()
         if len(rows) < k:
             # reference contract (app.py:226-227): explicit found/need
             # error instead of an IndexError / opaque feature-count
@@ -195,13 +194,12 @@ def cmd_serve(args: argparse.Namespace) -> int:
     from .ohlcv.serving_http import ServingBackend, make_handler
     from .session import get_spark
 
-    spark = get_spark("serving-http")
-    read = lambda p: spark.read.parquet(p) if p else None  # noqa: E731
+    get_spark("serving-http")
     backend = ServingBackend(
-        hist=read(args.hist),
-        latest=read(args.latest),
-        stats=read(args.stats),
-        chart=read(args.chart),
+        hist=args.hist,
+        latest=args.latest,
+        stats=args.stats,
+        chart=args.chart,
         artifacts_dir=args.artifacts,
     )
     srv = ThreadingHTTPServer((args.host, args.port), make_handler(backend))
@@ -513,7 +511,7 @@ def main(argv: list[str] | None = None) -> int:
     fc.add_argument("--symbol", default="BTC_USDT")
     fc.add_argument("--artifacts", default="/root/reference/trained_models")
     fc.add_argument("--steps", type=int, default=24)
-    fc.add_argument("--hist", help="candles parquet (symbol/timestamp_dt/close); omitted -> synthetic mid-range window")
+    fc.add_argument("--hist", help="historical candles table (batch --table); omitted -> synthetic mid-range window")
     fc.set_defaults(fn=cmd_forecast)
 
     sv = sub.add_parser(
@@ -523,10 +521,10 @@ def main(argv: list[str] | None = None) -> int:
         "/api/historical_data /api/predict_xgboost) over parquet "
         "serving tables — no Flask/ES dependency",
     )
-    sv.add_argument("--hist", help="historical candles parquet (symbol/timeframe/timestamp_dt/close/sma_7/sma_30)")
-    sv.add_argument("--latest", help="latest-snapshot parquet (symbol keyed)")
-    sv.add_argument("--stats", help="windowed-stats parquet (symbol/window_end)")
-    sv.add_argument("--chart", help="1m chart parquet (symbol/event_timestamp/close)")
+    sv.add_argument("--hist", help="historical candles table (batch --table)")
+    sv.add_argument("--latest", help="latest-snapshot table (stream --out/latest)")
+    sv.add_argument("--stats", help="windowed-stats table (stream --out/stats)")
+    sv.add_argument("--chart", help="1m chart table (stream --out/chart)")
     # no machine-specific default: with no artifacts dir the predict
     # endpoint answers 404 "No artifacts directory configured."
     sv.add_argument("--artifacts", default=None)

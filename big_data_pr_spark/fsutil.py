@@ -1,9 +1,9 @@
-"""Filesystem helpers for sink first-write detection.
+"""Filesystem guards for table writers.
 
-The parquet upsert sinks must distinguish "no prior table" (take the
-first-write branch) from "prior table unreadable" (fail the batch and
-retry) — treating an IO error as absence would overwrite previously
-finalized data, the exact loss mode the reference's ES upsert
+A writer must distinguish "no prior table" (take the first-write
+branch) from "prior table unreadable" (fail the batch and retry) —
+treating an IO error as absence would overwrite previously finalized
+data, the exact loss mode the reference's ES upsert
 (``batch_processor.py:142-148``) cannot hit because the index either
 exists or the request errors.
 
@@ -14,12 +14,14 @@ Two enforcement levels:
   so the check always matches whatever filesystem the subsequent
   ``df.write`` targets. Use it wherever the sink itself is
   scheme-agnostic (plain Spark writes).
-- :func:`require_local` fails loudly for sinks whose atomic-swap step
-  uses OS-level ``shutil.rmtree``/``os.rename`` and is therefore
-  local-FS only by construction; on a real cluster those sinks are
-  replaced by Delta ``MERGE INTO`` (see ohlcv/batch.py docstring), and
-  the guard turns "silent wrong branch on s3a://" into an immediate
-  error.
+- :func:`require_local` fails loudly for writers that commit through
+  OS-level file operations and are therefore local-FS only by
+  construction: the versioned-table pointer rename
+  (``operators/versioned.py``, which every Lambda table commits
+  through), ``storage.compact``'s swap and the IVF index markers. The
+  guard turns "silent wrong branch on s3a://" — an ``os.makedirs``
+  creating a local ``hdfs:/…`` directory, a pointer landing on the
+  wrong filesystem — into an immediate error.
 """
 
 from __future__ import annotations
@@ -47,15 +49,15 @@ def fs_exists(spark: SparkSession, path: str) -> bool:
 def require_local(path: str, op: str) -> None:
     """Fail loudly when ``path`` is not a local filesystem path.
 
-    For sinks whose swap step is OS-level (``os.rename``): on any other
-    scheme the os-level existence check silently reports absence and
-    the rename would target the wrong filesystem entirely.
+    For writers whose commit step is OS-level (``os.rename``): on any
+    other scheme the os-level existence check silently reports absence
+    and the rename would target the wrong filesystem entirely.
     """
     scheme = urlparse(path).scheme
     if scheme not in ("", "file"):
         raise ValueError(
-            f"{op}: path {path!r} has scheme {scheme!r} but this sink's "
-            "atomic swap is OS-level (shutil/os.rename) and supports "
-            "only local paths; use a Delta MERGE (or an FS-native "
-            "committer) for non-local tables"
+            f"{op}: path {path!r} has scheme {scheme!r} but this writer's "
+            "commit is OS-level (os.rename) and supports only local "
+            "paths; use a Delta MERGE (or an FS-native committer) for "
+            "non-local tables"
         )

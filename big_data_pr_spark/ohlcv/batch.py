@@ -6,10 +6,12 @@ Spark-first divergences from the reference (each deliberate, SURVEY §4):
 - no global ``orderBy`` before the window computation (the reference's
   ``batch_processor.py:104`` adds a redundant exchange+sort; the window
   spec alone provides per-partition order);
-- sink is partitioned Parquet with key-dedup upsert instead of the
-  Elasticsearch connector (same doc_id keying, ``batch_processor.py:
-  132-148``) — at production scale this becomes a Delta ``MERGE INTO``
-  on the identical key expression;
+- sink is a versioned Parquet table (``operators/versioned.py``)
+  partitioned by (symbol, timeframe), committed by a key-dedup upsert
+  instead of the Elasticsearch connector (same doc_id keying,
+  ``batch_processor.py:132-148``); like an ES index, a reader never
+  sees it half-written — at production scale this becomes a Delta
+  ``MERGE INTO`` on the identical key expression;
 - eager debug actions (``rdd.isEmpty``/``show`` per stage) are replaced
   by one ``df.isEmpty()`` early-exit.
 
@@ -21,14 +23,13 @@ exchanges are unavoidable and minimal (they ARE the semantics).
 
 from __future__ import annotations
 
-import os
-import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..fsutil import require_local
+from ..operators import versioned
 from .schemas import FILENAME_PATTERN, OHLCV_CSV_SCHEMA
 
 
@@ -140,34 +141,16 @@ def upsert_parquet(
     key_col: str = "doc_id",
     partition_cols: Sequence[str] = ("symbol", "timeframe"),
 ) -> None:
-    """Idempotent key-dedup upsert into a partitioned Parquet table —
-    plain-Parquet emulation of the reference's ES upsert
-    (``batch_processor.py:142-148``); new rows win over existing.
-
-    Production note (100 TB): replace with Delta ``MERGE INTO ... ON
-    t.doc_id = s.doc_id`` — identical keying, transactional, and avoids
-    rewriting untouched partitions. Kept jar-free here; we still use
-    dynamic partition overwrite semantics so only affected (symbol,
-    timeframe) partitions are rewritten on a real cluster.
+    """Idempotent key-dedup upsert into the versioned serving table —
+    the reference's ES upsert (``batch_processor.py:142-148``); new
+    rows win over existing. Commits one new version and vacuums the
+    previous one, so the table root holds exactly one version at rest.
     """
-    require_local(table_path, "upsert_parquet")  # swap is os.rename
-    new_df = new_df.withColumn("__pri", F.lit(1))
-    if os.path.exists(table_path):
-        old = spark.read.parquet(table_path).withColumn("__pri", F.lit(0))
-        merged = new_df.unionByName(old)
-    else:
-        merged = new_df
-    w = Window.partitionBy(key_col).orderBy(F.desc("__pri"))
-    deduped = (
-        merged.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__pri")
+    require_local(table_path, "upsert_parquet")  # before any Spark work
+    versioned.upsert_version(
+        spark, table_path, new_df, key_col, partition_by=partition_cols, note="batch"
     )
-    staging = table_path.rstrip("/") + ".staging"
-    deduped.write.mode("overwrite").partitionBy(*partition_cols).parquet(staging)
-    if os.path.exists(table_path):
-        shutil.rmtree(table_path)
-    os.rename(staging, table_path)
+    versioned.vacuum(table_path, keep_last=1)
 
 
 def run_batch(
@@ -179,4 +162,4 @@ def run_batch(
     if serving is None:
         return 0
     upsert_parquet(spark, serving, table_path)
-    return spark.read.parquet(table_path).count()
+    return versioned.read_version(spark, table_path).count()

@@ -18,7 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.windows import top1_per_key, topk
+from ..operators.windows import topk
+from .schemas import CHART_TS
 
 
 def encode_symbol(col: Column) -> Column:
@@ -51,31 +52,19 @@ def distinct_symbol_timeframes(hist: DataFrame) -> DataFrame:
     )
 
 
-def realtime_stats(latest: DataFrame, stats: DataFrame, symbol: str) -> DataFrame:
-    """GET /api/realtime_stats/<sym> (reference ``app.py:92-107``): J1 —
-    point lookup on the latest-candle snapshot broadcast-joined with the
-    top-1-per-key window-stats row."""
-    latest_row = latest.filter(F.col("symbol") == symbol)
-    stats_row = top1_per_key(
-        stats.filter(F.col("symbol") == symbol),
-        ["symbol"],
-        [F.desc("window_end")],
-    )
-    return latest_row.join(F.broadcast(stats_row), "symbol", "left")
-
-
 def chart_data_1m(chart: DataFrame, symbol: str, now_ts: Column) -> DataFrame:
     """GET /api/chart_data_1m/<sym> (reference ``app.py:109-135``):
     term(symbol) + range(last 35 min) + sort asc + limit 200 →
-    [event_timestamp, close] pairs."""
+    [``@timestamp``, close] pairs."""
+    ts = chart[CHART_TS]
     return (
         chart.filter(
             (F.col("symbol") == symbol)
-            & (F.col("event_timestamp") >= now_ts - F.expr("INTERVAL 35 MINUTES"))
-            & (F.col("event_timestamp") <= now_ts)
+            & (ts >= now_ts - F.expr("INTERVAL 35 MINUTES"))
+            & (ts <= now_ts)
         )
-        .select("event_timestamp", "close")
-        .orderBy("event_timestamp")
+        .select(ts, "close")
+        .orderBy(ts)
         .limit(200)
     )
 

@@ -16,12 +16,17 @@ available symbols + initial selection — as a minimal document):
 
 Design notes (documented divergences, all behavior-preserving):
 
-- ES indexes become Spark DataFrames (parquet serving tables); every
-  ES query-DSL construct maps per ``serving.py``'s table (term →
-  equality predicate, range → between, sort+size → orderBy+limit) —
-  the lookups stay partition-prunable scans, so the same facade in
-  front of a 100 TB hist table serves from partition/file pruning,
-  not full scans.
+- ES indexes become parquet serving tables read by path; every ES
+  query-DSL construct maps per ``serving.py``'s table (term → equality
+  predicate, range → between, sort+size → orderBy+limit) — the lookups
+  stay partition-prunable scans, so the same facade in front of a
+  100 TB hist table serves from partition/file pruning, not full scans.
+- Serving runs beside the writers, as the reference's app runs beside
+  ES upserts: each request reads each table's few-byte commit marker
+  (``_LATEST`` of a versioned table, ``operators/versioned.py``; the
+  chart file sink's ``_spark_metadata`` log) and re-plans only a table
+  whose marker moved. Nothing committed yet → absent, so ``serve`` may
+  start before the stream's first epoch.
 - The recursive forecast window size ``k`` derives from the decoded
   model artifact's ``n_features_in_`` instead of the reference's
   hardcoded per-symbol table (app.py:203-206) — same values for the
@@ -32,11 +37,11 @@ Design notes (documented divergences, all behavior-preserving):
   configured set is "symbols with any artifact file present", so a
   symbol with no artifacts is the same 400, while a configured symbol
   whose model/scaler file is missing is the reference's 404.
-- Symbols are canonical slash form ("BTC/USDT") in the tables; URL
-  forms ("BTC-USDT", "BTC_USDT") are decoded endpoint-side exactly
-  like the reference (app.py:94 ``replace('-','/')``; the historical
-  index keys on the underscore form, ours converts to slash form —
-  the ``cmd_forecast`` CLI contract).
+- Symbols are looked up in each table's stored form
+  (``schemas.symbol_key``): the stream tables key on the feed's slash
+  form ("BTC/USDT"), ``hist`` on the candle filename's underscore form
+  ("BTC_USDT"). URL forms ("BTC-USDT", "BTC_USDT") are decoded
+  endpoint-side like the reference (app.py:94 ``replace('-','/')``).
 - Results that reach JSON are serving-sized by construction (get-by-id,
   limit 200, limit 10000, top-k), so the driver-side collect is the
   endpoint payload, never a data-scale funnel.
@@ -52,11 +57,15 @@ from datetime import datetime, timezone
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, unquote, urlparse
 
-from pyspark.sql import Column, DataFrame
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import versioned
 from ..operators.windows import top1_per_key
 from . import serving
+from .schemas import CHART_SCHEMA, CHART_TS, symbol_key
 
 PREDICTION_STEPS_XGBOOST = 24  # app.py:23
 
@@ -78,73 +87,107 @@ def _ts_ms(dt: datetime) -> int:
     return int(dt.timestamp() * 1000)
 
 
-class ServingBackend:
-    """The five endpoint computations over the serving DataFrames.
+def _table_version(path: str | None) -> tuple[int, str] | None:
+    """(version, directory to read) of a serving table, or None while
+    nothing is committed: a versioned table's ``_LATEST`` pointer, else
+    the modification time of a Spark file sink's ``_spark_metadata`` log
+    (each micro-batch commit adds a file). One small read or stat."""
+    if not path:
+        return None
+    ver = versioned.current_version(path)
+    if ver is not None:
+        return ver, versioned.version_dir(path, ver)
+    try:
+        return os.stat(os.path.join(path, "_spark_metadata")).st_mtime_ns, path
+    except OSError:
+        return None
 
-    Any table may be None: the realtime/chart endpoints then answer
-    with their empty shapes, but ``historical_data`` 404s (its
-    upstream route 404s on a missing ES index — app.py:190). ``now_fn``
-    yields the chart window's "now" Column — ``F.current_timestamp()``
-    in production, a literal in tests for determinism.
+
+class ServingBackend:
+    """The five endpoint computations over the serving tables, given by
+    path (versioned ``hist``/``latest``/``stats``, the ``chart`` file
+    sink). Each request reads the table's version and re-plans the
+    table only when it changed. A table not configured or not yet
+    committed is absent: the realtime/chart endpoints then answer with
+    their empty shapes, but ``historical_data`` 404s (its upstream route
+    404s on a missing ES index — app.py:190). ``now_fn`` yields the
+    chart window's "now" Column — ``F.current_timestamp()`` in
+    production, a literal in tests for determinism.
     """
 
     def __init__(
         self,
-        hist: DataFrame | None = None,
-        latest: DataFrame | None = None,
-        stats: DataFrame | None = None,
-        chart: DataFrame | None = None,
+        hist: str | None = None,
+        latest: str | None = None,
+        stats: str | None = None,
+        chart: str | None = None,
         artifacts_dir: str | None = None,
         now_fn=None,
     ):
-        self.hist = hist
-        self.latest = latest
-        self.stats = stats
-        self.chart = chart
+        self.paths = {"hist": hist, "latest": latest, "stats": stats, "chart": chart}
+        self.plans: dict[str, tuple[int, DataFrame]] = {}  # table -> (version, plan)
+        self.lock = threading.Lock()
         self.artifacts_dir = artifacts_dir
         self.now_fn = now_fn or F.current_timestamp
 
+    def _plan(self, table: str) -> tuple[int, DataFrame] | None:
+        # the pointer is read under the lock, so a request that read an
+        # older version can never replace a newer cached plan
+        with self.lock:
+            got = _table_version(self.paths[table])
+            if got is None:
+                return None
+            cached = self.plans.get(table)
+            if cached is None or cached[0] != got[0]:
+                reader = SparkSession.builder.getOrCreate().read
+                if table == "chart":  # declared: readable before the first epoch
+                    reader = reader.schema(CHART_SCHEMA)
+                cached = self.plans[table] = (got[0], reader.parquet(got[1]))
+            return cached
+
+    def _query(self, table: str, build) -> list | None:
+        """``build(df).collect()`` on the table's committed version; None
+        while the table is absent. A plan or scan of a version a writer
+        vacuumed under it fails; if the version moved on meanwhile, the
+        request reads it again and runs once more."""
+        pinned = None
+        try:
+            plan = self._plan(table)
+            if plan is None:
+                return None
+            pinned = plan[0]
+            return build(plan[1]).collect()
+        except (PySparkException, Py4JJavaError):
+            now = _table_version(self.paths[table])
+            if now is not None and now[0] == pinned:
+                raise
+        plan = self._plan(table)
+        return None if plan is None else build(plan[1]).collect()
+
     # -- dropdown data (app.py:46-83) ---------------------------------
     def symbols(self) -> list[str]:
-        if self.latest is None:
-            return []
-        return [
-            r["symbol"] for r in serving.distinct_symbols(self.latest).collect()
-        ]
+        return [r["symbol"] for r in self._query("latest", serving.distinct_symbols) or []]
 
     def symbol_timeframes(self) -> list[str]:
-        if self.hist is None:
-            return []
-        return [
-            r["symbol_tf"].replace("/", "_")
-            for r in serving.distinct_symbol_timeframes(self.hist).collect()
-        ]
+        rows = self._query("hist", serving.distinct_symbol_timeframes) or []
+        return [symbol_key(r["symbol_tf"], "hist") for r in rows]
 
     # -- /api/realtime_stats (app.py:92-107) ---------------------------
     def realtime_stats(self, encoded_symbol: str) -> dict:
-        sym = encoded_symbol.replace("-", "/")
-        latest_d, stats_d = {}, {}
-        if self.latest is not None:
-            rows = self.latest.filter(F.col("symbol") == sym).limit(1).collect()
-            if rows:
-                latest_d = _row_dict(rows[0])
-        if self.stats is not None:
-            rows = top1_per_key(
-                self.stats.filter(F.col("symbol") == sym),
-                ["symbol"],
-                [F.desc("window_end")],
-            ).collect()
-            if rows:
-                stats_d = _row_dict(rows[0])
-        return {"latest": latest_d, "stats": stats_d}
+        sym = symbol_key(encoded_symbol, "latest")
+        latest = self._query("latest", lambda df: df.filter(F.col("symbol") == sym).limit(1))
+        stats = self._query("stats", lambda df: top1_per_key(
+            df.filter(F.col("symbol") == sym), ["symbol"], [F.desc("window_end")]))
+        return {
+            "latest": _row_dict(latest[0]) if latest else {},
+            "stats": _row_dict(stats[0]) if stats else {},
+        }
 
     # -- /api/chart_data_1m (app.py:109-135) ---------------------------
     def chart_data_1m(self, encoded_symbol: str) -> list[list]:
-        if self.chart is None:
-            return []
-        sym = encoded_symbol.replace("-", "/")
-        rows = serving.chart_data_1m(self.chart, sym, self.now_fn()).collect()
-        return [[_ts_ms(r["event_timestamp"]), r["close"]] for r in rows]
+        sym = symbol_key(encoded_symbol, "chart")
+        rows = self._query("chart", lambda df: serving.chart_data_1m(df, sym, self.now_fn()))
+        return [[_ts_ms(r[CHART_TS]), r["close"]] for r in rows or []]
 
     # -- /api/historical_data (app.py:153-193) --------------------------
     def historical_data(self, symbol_timeframe: str, range_str: str):
@@ -152,14 +195,14 @@ class ServingBackend:
         if len(parts) < 2:
             return {"error": "Invalid symbol_timeframe format."}, 400
         timeframe = parts[-1]
-        symbol = "_".join(parts[:-1]).replace("_", "/")
-        if self.hist is None:
+        symbol = "_".join(parts[:-1])
+        rows = self._query("hist", lambda df: serving.historical_data(
+            df, symbol_key(symbol, "hist"), timeframe, _RANGE_DAYS.get(range_str)))
+        if rows is None:
             # app.py:190: this route 404s on NotFoundError (missing ES
             # index) — unlike realtime/chart, which return empty shapes
             return {"error": "historical table not found."}, 404
-        rows = serving.historical_data(
-            self.hist, symbol, timeframe, _RANGE_DAYS.get(range_str)
-        ).collect()
+        symbol = symbol.replace("_", "/")  # the dataset labels' form
         labels = [r["timestamp_dt"].strftime("%Y-%m-%d %H:%M:%S") for r in rows]
         closes = [r["close"] for r in rows]
         sma7 = [r["sma_7"] for r in rows]
@@ -237,10 +280,11 @@ class ServingBackend:
         model, _params = load_reference_regressor(model_pkl)
         scaler = load_minmax_scaler(scaler_pkl)
         k = model.n_features_in_
-        sym = symbol_req.replace("_", "/")
-        if self.hist is None:
+        sym = symbol_key(symbol_req, "hist")
+        rows = self._query(
+            "hist", lambda df: serving.model_input_topk(df, sym, timeframe_req, k))
+        if rows is None:
             return {"error": "No historical table configured."}, 404
-        rows = serving.model_input_topk(self.hist, sym, timeframe_req, k).collect()
         if len(rows) < k:
             return {
                 "error": f"Not enough recent historical data for "

@@ -1,4 +1,4 @@
-"""CDC apply / keyed MERGE for parquet tables — Delta-less upsert.
+"""CDC keyed MERGE — Delta-less upsert semantics as pure DataFrames.
 
 Generalizes the reference's doc-id overwrite idempotency
 (``batch_processor.py:132-135`` ES upsert; here
@@ -15,20 +15,17 @@ MERGEd into the stored table —
 
 Scale: one left-anti join of the table against the (delta-sized) key
 set + a union — the table is scanned once; with the table bucketed by
-key the join is exchange-free. The write is an atomic staging-dir
-rename (readers see old or new, never a mix) — same pattern as
-``storage.compact``. On a real deployment, partition the table and
-rewrite only partitions containing changed keys.
+key the join is exchange-free. The stored form is a versioned table:
+``versioned.merge_version`` commits the merge as a new immutable
+version (readers see old or new, never a mix). On a real deployment,
+partition the table and rewrite only partitions containing changed
+keys.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from ..fsutil import require_local
 
 
 def latest_changes(
@@ -66,44 +63,3 @@ def merge_changes(
     )
     upserts = win.filter(F.col(op_col) != "D").drop(op_col, seq_col)
     return kept.unionByName(upserts)
-
-
-def apply_changes(
-    spark: SparkSession,
-    table_path: str,
-    changes: DataFrame,
-    key_col: str,
-    seq_col: str,
-    op_col: str = "op",
-) -> int:
-    """MERGE ``changes`` into the parquet table at ``table_path`` with a
-    staging-swap write. Creates the table from the changeset's inserts
-    if it doesn't exist. Returns the post-apply row count.
-
-    Swap protocol: write staging, rename live → ``.old``, rename
-    staging → live, delete ``.old``. The no-table window is the gap
-    between the two renames (two metadata ops), not a full recursive
-    delete — and a crash inside it leaves ``.old`` on disk for manual
-    recovery instead of losing the table. The guarantee is
-    LOCAL-FILESYSTEM only (``os.rename`` atomicity); on an object store
-    this step belongs to a table format with a transactional commit
-    protocol (Delta/Iceberg — see SCALE.md)."""
-    if os.path.isdir(table_path):
-        target = spark.read.parquet(table_path)
-        merged = merge_changes(target, changes, key_col, seq_col, op_col)
-    else:
-        merged = latest_changes(changes, key_col, seq_col, op_col).filter(
-            F.col(op_col) != "D"
-        ).drop(op_col, seq_col)
-    require_local(table_path, "apply_changes")  # swap is os.rename
-    staging = table_path.rstrip("/") + ".merging"
-    merged.write.mode("overwrite").parquet(staging)
-    old = table_path.rstrip("/") + ".old"
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    if os.path.isdir(table_path):
-        os.rename(table_path, old)
-    os.rename(staging, table_path)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    return spark.read.parquet(table_path).count()

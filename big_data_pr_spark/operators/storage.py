@@ -130,8 +130,8 @@ def compact(
     overhead, not the data, becomes the bottleneck.
 
     Rewrites the directory into ``ceil(bytes / target_file_bytes)``
-    files via an atomic staging-dir swap (same pattern as the streaming
-    keyed sinks). ``sort_cols`` optionally clusters rows so parquet
+    files via a staging-dir swap (the Lambda tables commit through
+    ``operators/versioned.py`` instead). ``sort_cols`` optionally clusters rows so parquet
     row-group min/max stats become selective for later range filters —
     the poor-man's Z-order for a single sort axis.
 

@@ -1,8 +1,9 @@
-"""Versioned parquet tables — Delta-less MVCC with time travel.
+"""Versioned parquet tables — Delta-less MVCC with time travel, and the
+one commit protocol of the Lambda tables (batch ``hist``, stream
+``latest`` and ``stats``).
 
-The staging-swap writers (``storage.compact``, ``cdc.apply_changes``)
-still have a two-rename window where a concurrent reader can miss the
-table. This module removes the race the way real table formats do:
+A reader never sees a half-written or missing table, the way real
+table formats do it:
 
 - every write lands in a NEW immutable version directory ``v{N}``;
 - commit is ONE atomic rename of a tiny pointer file (``_LATEST``);
@@ -12,13 +13,21 @@ table. This module removes the race the way real table formats do:
   until ``vacuum`` drops them, and the current version is never
   vacuumable.
 
+The Lambda writers vacuum to one version after each commit, so at rest
+a pyarrow hive dataset read of the table root (it skips the
+``_``-prefixed pointer and manifests) returns exactly the current
+version's rows; so does a Spark read of a partitioned table's root
+(``hist``). Spark reads the nested files of an unpartitioned root only
+with ``recursiveFileLookup``, so Spark readers use :func:`read_version`,
+as serving does — it reads by pointer and never depends on vacuuming.
+
 Scale posture: data directories are written by the cluster like any
 parquet output; the version manifest and pointer are O(bytes) driver
-metadata. Pointer atomicity relies on ``os.rename`` — local
-filesystems and HDFS; on S3-class object stores this pointer swap is
-exactly the step Delta's log / Iceberg's catalog performs with a
-conditional put, so the design carries over, only the commit primitive
-changes.
+metadata. Pointer atomicity relies on ``os.rename``, so tables must be
+local paths (:func:`fsutil.require_local`); on S3-class object stores
+this pointer swap is exactly the step Delta's log / Iceberg's catalog
+performs with a conditional put, so the design carries over, only the
+commit primitive changes.
 
 Capability parity note: generalizes the reference's full-overwrite
 refresh (batch_processor.py writes each day's chartdata index anew)
@@ -31,14 +40,19 @@ import json
 import os
 import shutil
 import time
+from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from ..fsutil import require_local
 
 _POINTER = "_LATEST"
 _MANIFESTS = "_versions"
 
 
-def _vdir(table_dir: str, version: int) -> str:
+def version_dir(table_dir: str, version: int) -> str:
+    """The immutable data directory of ``version``."""
     return os.path.join(table_dir, f"v{version:06d}")
 
 
@@ -74,7 +88,11 @@ def manifest(table_dir: str, version: int | None = None) -> dict:
 
 
 def write_version(
-    df: DataFrame, table_dir: str, note: str = "", extra: dict | None = None
+    df: DataFrame,
+    table_dir: str,
+    note: str = "",
+    extra: dict | None = None,
+    partition_by: Sequence[str] = (),
 ) -> int:
     """Commit ``df`` as the next version of the table; returns the new
     version number. The data write is fully distributed; the commit is
@@ -85,11 +103,13 @@ def write_version(
     ``extra`` rides inside the version manifest, so caller metadata
     (e.g. a refresh watermark) commits atomically WITH the data — state
     and metadata can never diverge across a crash (the Delta/Iceberg
-    txn-metadata pattern)."""
+    txn-metadata pattern). ``partition_by`` lays the version directory
+    out as hive ``col=value/`` subdirectories."""
+    require_local(table_dir, "write_version")
     os.makedirs(os.path.join(table_dir, _MANIFESTS), exist_ok=True)
     ver = (current_version(table_dir) or 0) + 1
-    data_dir = _vdir(table_dir, ver)
-    df.write.mode("overwrite").parquet(data_dir)
+    data_dir = version_dir(table_dir, ver)
+    df.write.mode("overwrite").partitionBy(*partition_by).parquet(data_dir)
     manifest = {
         "version": ver,
         "committed_at": time.time(),
@@ -117,7 +137,7 @@ def read_version(
     ver = version if version is not None else current_version(table_dir)
     if ver is None:
         raise FileNotFoundError(f"no committed version at {table_dir}")
-    data_dir = _vdir(table_dir, ver)
+    data_dir = version_dir(table_dir, ver)
     if not os.path.isdir(data_dir):
         raise FileNotFoundError(
             f"version {ver} of {table_dir} was vacuumed or never committed"
@@ -143,8 +163,6 @@ def merge_version(
 
     cur = current_version(table_dir)
     if cur is None:
-        from pyspark.sql import functions as F
-
         base = latest_changes(changes, key_col, seq_col, op_col).filter(
             F.col(op_col) != "D"
         ).drop(op_col, seq_col)
@@ -154,23 +172,48 @@ def merge_version(
     return write_version(merged, table_dir, note or f"merge onto v{cur}")
 
 
+def upsert_version(
+    spark: SparkSession,
+    table_dir: str,
+    rows: DataFrame,
+    key_col: str,
+    partition_by: Sequence[str] = (),
+    note: str = "",
+) -> int:
+    """Keyed upsert as a new version: ``rows`` replace the current
+    version's rows with the same ``key_col`` and add the rest (new rows
+    win — the ES doc-id overwrite). Replaying the same rows commits a
+    version with identical content."""
+    merged = rows.withColumn("__pri", F.lit(1))
+    cur = current_version(table_dir)
+    if cur is not None:
+        old = read_version(spark, table_dir, cur).withColumn("__pri", F.lit(0))
+        merged = merged.unionByName(old)
+    w = Window.partitionBy(key_col).orderBy(F.desc("__pri"))
+    deduped = (
+        merged.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn", "__pri")
+    )
+    return write_version(
+        deduped, table_dir, note or "upsert", partition_by=partition_by
+    )
+
+
 def vacuum(table_dir: str, keep_last: int = 2) -> list[int]:
     """Drop version data directories older than the newest
     ``keep_last`` (manifests are kept — history metadata survives).
-    The current version is always retained. Returns dropped versions."""
+    The current version is always retained, and so is any directory
+    newer than it (a write in flight). Versions come from the ``v*``
+    directory names, not the manifests, so the cost does not grow with
+    the table's history. Returns dropped versions."""
     cur = current_version(table_dir)
     if cur is None:
         return []
-    committed = [v["version"] for v in versions(table_dir)]
-    keep = set(sorted(committed)[-max(keep_last, 1) :]) | {cur}
-    dropped = []
-    for v in committed:
-        if v in keep:
-            continue
-        d = _vdir(table_dir, v)
-        if os.path.isdir(d):
-            shutil.rmtree(d)
-            dropped.append(v)
+    on_disk = (int(n[1:]) for n in os.listdir(table_dir) if n[:1] == "v" and n[1:].isdigit())
+    dropped = sorted(v for v in on_disk if v <= cur)[: -max(keep_last, 1)]
+    for v in dropped:
+        shutil.rmtree(version_dir(table_dir, v))
     return dropped
 
 
@@ -194,7 +237,7 @@ def optimize_version(
     cur = current_version(table_dir)
     if cur is None:
         raise FileNotFoundError(f"no committed version at {table_dir}")
-    data_dir = _vdir(table_dir, cur)
+    data_dir = version_dir(table_dir, cur)
     total = sum(
         os.path.getsize(os.path.join(data_dir, f))
         for f in os.listdir(data_dir)

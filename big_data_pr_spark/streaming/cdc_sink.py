@@ -1,27 +1,27 @@
-"""Streaming CDC apply — continuous keyed MERGE into a parquet table.
+"""Streaming CDC apply — continuous keyed MERGE into a versioned table.
 
-Bridges the batch CDC operator (``operators/cdc.py::apply_changes``)
-into Structured Streaming via ``foreachBatch``: every micro-batch of
-keyed ``I``/``U``/``D`` changes is MERGEd into the stored table with
-the same last-wins-by-sequence semantics, giving a Delta-less streaming
+Bridges the CDC MERGE (``operators/versioned.py::merge_version`` over
+``operators/cdc.py::merge_changes``) into Structured Streaming via
+``foreachBatch``: every micro-batch of keyed ``I``/``U``/``D`` changes
+is MERGEd into the stored table with last-wins-by-sequence semantics
+and committed as a new table version, giving a Delta-less streaming
 upsert sink — the shape the reference's streaming ES upserts take
 (``stream_processor.py:111-175`` foreachBatch sinks, keyed doc-id
 overwrite), generalized to a full changeset contract.
 
 End-to-end delivery semantics: the file/Kafka source is replayable, the
-checkpoint makes batch ids durable, and ``apply_changes`` is idempotent
-for replayed changesets (last-wins by sequence; re-applying a batch the
-table already absorbed is a no-op) — so the pipeline is effectively
-exactly-once for the TABLE STATE even though ``foreachBatch`` only
-guarantees at-least-once execution. A crash between the table swap and
-the checkpoint commit replays the batch; the replay merges to the same
-state.
+checkpoint makes batch ids durable, and the merge is idempotent for
+replayed changesets (last-wins by sequence; re-applying a batch the
+table already absorbed commits a version with the same content) — so
+the pipeline is effectively exactly-once for the TABLE STATE even
+though ``foreachBatch`` only guarantees at-least-once execution. A
+crash between the version commit and the checkpoint commit replays the
+batch; the replay merges to the same state.
 
 Scale: each micro-batch pays one left-anti join of the table against
 the delta-sized key set (exchange-free when the table is bucketed by
-key) + a staging-swap rewrite. At 100 TB, partition the table and
-rewrite only partitions containing changed keys; the swap becomes a
-per-partition commit in a transactional table format.
+key) + a rewrite into the next version directory. At 100 TB, partition
+the table and rewrite only partitions containing changed keys.
 """
 
 from __future__ import annotations
@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.cdc import apply_changes
+from ..operators.versioned import merge_version
 
 CHANGE_SCHEMA = (
     "key LONG, op STRING, seq LONG, payload STRING"
@@ -43,43 +43,6 @@ def parse_change_stream(raw: DataFrame) -> DataFrame:
     return raw.select(
         F.from_json(F.col("value"), CHANGE_SCHEMA).alias("c")
     ).select("c.key", "c.op", "c.seq", "c.payload")
-
-
-def start_cdc_apply(
-    changes: DataFrame,
-    table_path: str,
-    checkpoint_dir: str,
-    key_col: str = "key",
-    seq_col: str = "seq",
-    op_col: str = "op",
-    trigger: str | None = None,
-) -> StreamingQuery:
-    """Launch the streaming MERGE: each micro-batch applies its
-    changeset to ``table_path`` through the batch CDC operator.
-    ``trigger`` is a processingTime string; ``None`` → availableNow
-    (drain-and-stop, test/backfill mode)."""
-
-    def apply_batch(batch_df: DataFrame, _epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        apply_changes(
-            batch_df.sparkSession,
-            table_path,
-            batch_df,
-            key_col=key_col,
-            seq_col=seq_col,
-            op_col=op_col,
-        )
-
-    trig = {"processingTime": trigger} if trigger else {"availableNow": True}
-    return (
-        changes.writeStream.outputMode("append")
-        .foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**trig)
-        .queryName("cdc_apply")
-        .start()
-    )
 
 
 def start_versioned_cdc_apply(
@@ -105,8 +68,6 @@ def start_versioned_cdc_apply(
     gains a benign duplicate entry noted with its epoch id. Pair with
     ``versioned.vacuum`` on a maintenance cadence to bound storage.
     """
-    from ..operators.versioned import merge_version
-
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return

@@ -20,12 +20,15 @@ Topology (one source, three queries — T7):
    scale-correct choice — partition pruning works for event-time
    queries and reprocessing is stable.)
 
-Sinks are ``foreachBatch`` → keyed parquet upsert — the same
+The snapshot and stats sinks are ``foreachBatch`` → one version commit
+of a versioned parquet table (``operators/versioned.py``) per epoch: a
+reader never sees a half-written table, and keyed upsert gives the same
 exactly-once-by-idempotent-key strategy the reference uses against ES
 (doc_id overwrite), which makes micro-batch replays after failure safe
-(T5/T6). Sources are pluggable: Kafka in production (S2; builder below,
-needs the kafka connector jar), file/rate source in tests — identical
-downstream plan either way.
+(T5/T6). The chart is Spark's file sink, committed by its own
+``_spark_metadata`` log. Sources are pluggable: Kafka in production
+(S2; builder below, needs the kafka connector jar), file/rate source in
+tests — identical downstream plan either way.
 """
 
 from __future__ import annotations
@@ -38,8 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..fsutil import require_local
-from ..ohlcv.schemas import OHLCV_STREAM_SCHEMA
+from ..ohlcv.schemas import CHART_FIELDS, CHART_TS, OHLCV_STREAM_SCHEMA
+from ..operators import versioned
 
 WINDOW_DURATION = os.environ.get("OHLCV_WINDOW_DURATION", "10 minutes")
 SLIDE_DURATION = os.environ.get("OHLCV_SLIDE_DURATION", "1 minute")
@@ -210,20 +213,17 @@ def window_stats(
 def raw_chart(parsed: DataFrame) -> DataFrame:
     """Q3 projection: pre-watermark pass-through for charting, keyed
     ``{sym}_1m_{ts_ms}`` (``stream_processor.py:149-169``), partitioned
-    by event date."""
-    return parsed.select(
-        F.col("event_timestamp").alias("@timestamp"),
-        "symbol",
-        "close",
-        "volume",
-        "timestamp_ms",
-        F.concat(
+    by event date; columns as ``schemas.CHART_FIELDS``."""
+    derived = {
+        CHART_TS: F.col("event_timestamp"),
+        "doc_id": F.concat(
             F.replace(F.col("symbol"), F.lit("/"), F.lit("-")),
             F.lit("_1m_"),
             F.col("timestamp_ms").cast("string"),
-        ).alias("doc_id"),
-        F.to_date(F.col("event_timestamp")).alias("event_date"),
-    )
+        ),
+        "event_date": F.to_date(F.col("event_timestamp")),
+    }
+    return parsed.select(*[derived.get(c, F.col(c)).alias(c) for c in CHART_FIELDS])
 
 
 def dedup_stream(parsed: DataFrame, watermark: str = WATERMARK) -> DataFrame:
@@ -336,38 +336,18 @@ def score_stream(parsed: DataFrame, model_json: str, out_col: str = "score") -> 
 
 
 def _overwrite_keyed(df: DataFrame, path: str) -> None:
-    """Snapshot sink: replace the table with this epoch's state (complete
-    output mode ⇒ every epoch carries the full keyed table)."""
-    require_local(path, "_overwrite_keyed")  # swap is os.rename
-    staging = path.rstrip("/") + ".staging"
-    df.write.mode("overwrite").parquet(staging)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    os.rename(staging, path)
+    """Snapshot sink: commit this epoch's state as the table's next
+    version (complete output mode ⇒ every epoch carries the full keyed
+    table)."""
+    versioned.write_version(df, path, "stream snapshot")
+    versioned.vacuum(path, keep_last=1)
 
 
 def _upsert_keyed(df: DataFrame, path: str, key: str = "doc_id") -> None:
     """Update sink: merge this epoch's changed rows by doc key (the ES
     upsert analogue). Epoch replays overwrite the same keys — idempotent."""
-    require_local(path, "_upsert_keyed")  # swap is os.rename
-    spark = df.sparkSession
-    df = df.withColumn("__pri", F.lit(1))
-    if os.path.exists(path):
-        old = spark.read.parquet(path).withColumn("__pri", F.lit(0))
-        df = df.unionByName(old)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(key).orderBy(F.desc("__pri"))
-    merged = (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__pri")
-    )
-    staging = path.rstrip("/") + ".staging"
-    merged.write.mode("overwrite").parquet(staging)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    os.rename(staging, path)
+    versioned.upsert_version(df.sparkSession, path, df, key, note="stream upsert")
+    versioned.vacuum(path, keep_last=1)
 
 
 def start_three_queries(

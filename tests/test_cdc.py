@@ -2,17 +2,23 @@
 
 from __future__ import annotations
 
-from big_data_pr_spark.operators.cdc import apply_changes, merge_changes
+from big_data_pr_spark.operators import versioned
+from big_data_pr_spark.operators.cdc import merge_changes
 
 
 def _rows(spark, path):
     return {
         r["k"]: (r["v"], r["note"])
-        for r in spark.read.parquet(path).collect()
+        for r in versioned.read_version(spark, path).collect()
     }
 
 
-def test_apply_changes_full_lifecycle(spark, tmp_path):
+def _apply(spark, path, changes):
+    versioned.merge_version(spark, path, changes, "k", "seq")
+    return versioned.read_version(spark, path).count()
+
+
+def test_merge_version_full_lifecycle(spark, tmp_path):
     path = str(tmp_path / "tbl")
     schema = "k long, v double, note string, op string, seq long"
 
@@ -26,7 +32,7 @@ def test_apply_changes_full_lifecycle(spark, tmp_path):
         ],
         schema,
     )
-    assert apply_changes(spark, path, c1, "k", "seq") == 3
+    assert _apply(spark, path, c1) == 3
 
     # update + delete + insert in one changeset; key 2 gets two changes,
     # highest seq wins
@@ -39,19 +45,19 @@ def test_apply_changes_full_lifecycle(spark, tmp_path):
         ],
         schema,
     )
-    assert apply_changes(spark, path, c2, "k", "seq") == 3
+    assert _apply(spark, path, c2) == 3
     got = _rows(spark, path)
     assert got == {1: (1.0, "a"), 2: (22.0, "b2"), 4: (4.0, "d")}
 
     # replaying the same changeset is a no-op (at-least-once safety)
-    assert apply_changes(spark, path, c2, "k", "seq") == 3
+    assert _apply(spark, path, c2) == 3
     assert _rows(spark, path) == got
 
     # delete-then-reinsert at higher seq resurrects the key
     c3 = spark.createDataFrame(
         [(4, None, None, "D", 20), (4, 44.0, "d2", "I", 21)], schema
     )
-    apply_changes(spark, path, c3, "k", "seq")
+    _apply(spark, path, c3)
     assert _rows(spark, path)[4] == (44.0, "d2")
 
 
@@ -70,7 +76,7 @@ def test_merge_changes_pure_dataframe(spark):
     assert out == {2: 2.0, 3: 3.0}
 
 
-def test_streaming_cdc_apply_matches_batch_merge(spark, tmp_path):
+def test_streaming_versioned_cdc_apply_matches_batch_merge(spark, tmp_path):
     """foreachBatch CDC sink: streamed changesets MERGE into the table
     with the same final state a single batch merge produces, and
     re-running the stream over the same input (fresh checkpoint,
@@ -97,14 +103,14 @@ def test_streaming_cdc_apply_matches_batch_merge(spark, tmp_path):
 
     def run(cp_name):
         raw = pipeline.file_source(spark, str(in_dir))
-        q = cdc_sink.start_cdc_apply(
+        q = cdc_sink.start_versioned_cdc_apply(
             cdc_sink.parse_change_stream(raw), table, str(tmp_path / cp_name)
         )
         q.awaitTermination(120)
 
     run("cp1")
     got = {
-        r.key: r.payload for r in spark.read.parquet(table).collect()
+        r.key: r.payload for r in versioned.read_version(spark, table).collect()
     }
     assert got == {1: "a", 2: "b2", 4: "d"}  # 3 deleted, 2 updated
 
@@ -124,14 +130,16 @@ def test_streaming_cdc_apply_matches_batch_merge(spark, tmp_path):
     # replay the whole stream with a FRESH checkpoint onto the existing
     # table: last-wins merge makes it a no-op
     run("cp2")
-    again = {r.key: r.payload for r in spark.read.parquet(table).collect()}
+    again = {
+        r.key: r.payload for r in versioned.read_version(spark, table).collect()
+    }
     assert again == got
 
 
 def test_streaming_versioned_cdc_commits_epoch_history(spark, tmp_path):
-    """The versioned streaming sink: same final state as the swap sink,
-    plus a queryable per-epoch version history, and a reader pinned
-    mid-stream is never disturbed by later commits."""
+    """The versioned streaming sink: a queryable per-epoch version
+    history, and a reader pinned mid-stream is never disturbed by later
+    commits."""
     import json as _json
 
     from big_data_pr_spark.operators import versioned

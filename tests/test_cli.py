@@ -9,6 +9,7 @@ import json
 import pytest
 
 from big_data_pr_spark.__main__ import main
+from big_data_pr_spark.operators import versioned
 
 
 def test_list_names_every_registry_query(spark, capsys):
@@ -225,17 +226,18 @@ def test_cli_forecast_hist_real_artifacts(spark, tmp_path, capsys):
     closes = [80000.0, 80900.0, 80400.0, 81300.0, 80700.0, 81100.0,
               80500.0, 81250.0]
     rows = [
-        ("BTC/USDT", i, c) for i, c in enumerate(closes)
-    ] + [("ETH/USDT", i, 2000.0 + i) for i in range(8)]
+        ("BTC_USDT", i, c) for i, c in enumerate(closes)
+    ] + [("ETH_USDT", i, 2000.0 + i) for i in range(8)]
     hist = spark.createDataFrame(
         rows, "symbol string, hour int, close double"
     ).selectExpr(
         "symbol",
+        "'1h' AS timeframe",
         f"timestamp_millis({base_ms} + hour * 3600000) AS timestamp_dt",
         "close",
     )
     path = str(tmp_path / "hist")
-    hist.write.parquet(path)
+    versioned.write_version(hist, path, partition_by=("symbol", "timeframe"))
 
     rc = main(["forecast", "--symbol", "BTC_USDT", "--hist", path,
                "--steps", "4"])
@@ -266,12 +268,14 @@ def test_cli_forecast_hist_too_short_reports_found_need(spark, tmp_path, capsys)
     if not os.path.isdir("/root/reference/trained_models"):
         pytest.skip("reference artifacts not present")
     hist = spark.createDataFrame(
-        [("BTC/USDT", 1_700_000_000_000, 80000.0),
-         ("BTC/USDT", 1_700_003_600_000, 80500.0)],
+        [("BTC_USDT", 1_700_000_000_000, 80000.0),
+         ("BTC_USDT", 1_700_003_600_000, 80500.0)],
         "symbol string, ms long, close double",
-    ).selectExpr("symbol", "timestamp_millis(ms) AS timestamp_dt", "close")
+    ).selectExpr(
+        "symbol", "'1h' AS timeframe", "timestamp_millis(ms) AS timestamp_dt", "close"
+    )
     path = str(tmp_path / "hist")
-    hist.write.parquet(path)
+    versioned.write_version(hist, path, partition_by=("symbol", "timeframe"))
     rc = main(["forecast", "--symbol", "BTC_USDT", "--hist", path])
     assert rc == 1
     err = capsys.readouterr().err

@@ -1,0 +1,247 @@
+"""The Lambda layers on each other's real outputs: the ``batch`` and
+``stream`` CLI commands write the tables, ``ServingBackend`` serves
+what they wrote, and every route is checked against numpy.
+
+Two symbols, a few hundred rows: a 150-hour history per symbol plus one
+hourly update file (batch), and 40 one-minute candles per symbol
+(stream, availableNow). The forecast uses a synthetic scaler and model
+in place of the pickled artifacts and is replayed here in numpy.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+import time
+import urllib.error
+import urllib.request
+
+import numpy as np
+import pytest
+
+from big_data_pr_spark.__main__ import main
+from big_data_pr_spark.ohlcv import artifacts, xgb_ubjson
+from big_data_pr_spark.ohlcv.artifacts import MinMaxScalerParams
+from big_data_pr_spark.ohlcv.serving_http import ServingBackend, start_server
+from big_data_pr_spark.operators import versioned
+
+HOUR_MS, MINUTE_MS = 3_600_000, 60_000
+SYMS = ["BTC_USDT", "ETH_USDT"]  # the candle files' (and hist's) form
+HOURS, UPDATE_HOURS, MINUTES, K = 150, 3, 40, 5
+NOW_MS = int(time.time() * 1000) // HOUR_MS * HOUR_MS
+H0 = NOW_MS - (HOURS + UPDATE_HOURS) * HOUR_MS  # first hourly candle
+M0 = NOW_MS - MINUTES * MINUTE_MS  # first one-minute candle
+NEWEST_M = M0 + (MINUTES - 1) * MINUTE_MS
+
+
+def _closes(seed: int, n: int, start: float) -> np.ndarray:
+    rng = np.random.default_rng(seed)
+    return np.round(start * np.cumprod(1 + rng.normal(0, 0.01, n)), 4)
+
+
+HOURLY = {s: _closes(i, HOURS + UPDATE_HOURS, 100.0 * (i + 1)) for i, s in enumerate(SYMS)}
+MINUTELY = {s: _closes(10 + i, MINUTES, 50.0 * (i + 1)) for i, s in enumerate(SYMS)}
+
+
+def _sma(closes: np.ndarray, n: int) -> np.ndarray:
+    return np.array([closes[max(0, i - n + 1): i + 1].mean() for i in range(len(closes))])
+
+
+def _csv(path, sym: str, rows: range) -> None:
+    lines = ["timestamp,open,high,low,close,volume,datetime_str"]
+    for i in rows:
+        c = HOURLY[sym][i]
+        lines.append(f"{H0 + i * HOUR_MS},{c},{c + 1},{c - 1},{c},{10 + i},x")
+    path.write_text("\n".join(lines) + "\n")
+
+
+class _Model:
+    """Stand-in regressor: scaled next = 0.7·last + 0.3·window mean."""
+
+    n_features_in_ = K
+
+    def predict(self, x: np.ndarray) -> np.ndarray:
+        w = x.reshape(-1)
+        return np.array([0.7 * w[-1] + 0.3 * w.mean()])
+
+
+def _scaler(sym: str) -> MinMaxScalerParams:
+    lo, hi = HOURLY[sym].min() * 0.9, HOURLY[sym].max() * 1.1
+    scale = np.array([1.0 / (hi - lo)])
+    return MinMaxScalerParams(scale_=scale, min_=-lo * scale)
+
+
+def _replay(sym: str) -> list[float]:
+    s = _scaler(sym)
+    w = HOURLY[sym][-K:] * s.scale_[0] + s.min_[0]
+    out = []
+    for _ in range(24):
+        p = 0.7 * w[-1] + 0.3 * w.mean()
+        out.append((p - s.min_[0]) / s.scale_[0])
+        w = np.append(w[1:], p)
+    return out
+
+
+@pytest.fixture(scope="module")
+def lambda_tables(spark, tmp_path_factory):
+    root = tmp_path_factory.mktemp("lambda")
+    hist_dir, upd_dir, src = root / "history", root / "updates", root / "src"
+    for d in (hist_dir, upd_dir, src):
+        d.mkdir()
+    for sym in SYMS:
+        _csv(hist_dir / f"{sym}_1h.csv", sym, range(HOURS))
+    tables = {"hist": str(root / "hist")}
+    # backfill, then one hourly cycle over history + updates (the cron)
+    assert main(["batch", "--input", str(hist_dir / "*_1h.csv"), "--table", tables["hist"]]) == 0
+    for sym in SYMS:
+        _csv(upd_dir / f"{sym}_1h_update_20250101_000000.csv", sym,
+             range(HOURS, HOURS + UPDATE_HOURS))
+    assert main(["batch", "--input", str(hist_dir / "*_1h.csv"),
+                 str(upd_dir / "*_update_*.csv"), "--table", tables["hist"]]) == 0
+
+    for j in range(0, MINUTES, 10):
+        msgs = [
+            json.dumps({
+                "timestamp": M0 + i * MINUTE_MS, "symbol": sym.replace("_", "/"),
+                "timeframe": "1m", "open": c, "high": c + 1, "low": c - 1,
+                "close": c, "volume": 1.0 + i, "datetime_str": "x",
+            })
+            for sym in SYMS
+            for i, c in enumerate(MINUTELY[sym][j: j + 10], start=j)
+        ]
+        (src / f"part-{j:03d}.json").write_text("\n".join(msgs) + "\n")
+    out = root / "out"
+    assert main(["stream", "--path", str(src), "--out", str(out),
+                 "--checkpoint", str(root / "ck")]) == 0
+    tables.update({t: str(out / t) for t in ("latest", "stats", "chart")})
+    return tables
+
+
+@pytest.fixture(scope="module")
+def server(lambda_tables, tmp_path_factory):
+    from pyspark.sql import functions as F
+
+    art = tmp_path_factory.mktemp("artifacts")
+    for sym in SYMS:  # the route checks that both files exist
+        (art / f"{sym}_xgboost_model.pkl").write_bytes(b"synthetic")
+        (art / f"{sym}_scaler.pkl").write_bytes(b"synthetic")
+    mp = pytest.MonkeyPatch()
+    mp.setattr(xgb_ubjson, "load_reference_regressor", lambda _p: (_Model(), {}))
+    mp.setattr(artifacts, "load_minmax_scaler",
+               lambda p: _scaler(p.rsplit("/", 1)[1].removesuffix("_scaler.pkl")))
+    now = F.expr(f"timestamp_millis({NEWEST_M})")
+    backend = ServingBackend(**lambda_tables, artifacts_dir=str(art), now_fn=lambda: now)
+    srv, port = start_server(backend)
+    yield port
+    srv.shutdown()
+    mp.undo()
+
+
+def _get(port: int, path: str):
+    try:
+        with urllib.request.urlopen(f"http://127.0.0.1:{port}{path}") as r:
+            body = r.read().decode()
+            ctype = r.headers.get("Content-Type")
+            return r.status, json.loads(body) if ctype == "application/json" else body
+    except urllib.error.HTTPError as e:
+        return e.code, json.loads(e.read().decode())
+
+
+def _utc_ms(s: str) -> int:
+    from datetime import datetime, timezone
+
+    return int(datetime.fromisoformat(s).replace(tzinfo=timezone.utc).timestamp() * 1000)
+
+
+@pytest.mark.parametrize("sym", SYMS)
+def test_history_closes_and_sma_match_numpy(server, sym):
+    closes = HOURLY[sym]
+    for rng in ("all", "1m"):
+        code, body = _get(server, f"/api/historical_data/{sym}_1h?range={rng}")
+        assert code == 200
+        close, sma7, sma30 = (ds["data"] for ds in body["datasets"])
+        assert len(body["labels"]) == len(closes)
+        np.testing.assert_allclose(close, closes, rtol=1e-12)
+        np.testing.assert_allclose(sma7, _sma(closes, 7), rtol=1e-12)
+        np.testing.assert_allclose(sma30, _sma(closes, 30), rtol=1e-12)
+
+
+@pytest.mark.parametrize("sym", SYMS)
+def test_realtime_latest_candle_and_window(server, sym):
+    code, body = _get(server, f"/api/realtime_stats/{sym.replace('_', '-')}")
+    assert code == 200
+    latest, stats = body["latest"], body["stats"]
+    assert latest["timestamp_ms"] == NEWEST_M
+    assert latest["current_price"] == pytest.approx(MINUTELY[sym][-1], rel=1e-12)
+    assert latest["volume"] == pytest.approx(float(MINUTES))
+    # the window with the latest end opens at the newest candle
+    assert _utc_ms(stats["window_end"]) == NEWEST_M + 10 * MINUTE_MS
+    assert stats["n_candles"] == 1
+    assert stats["avg_close"] == pytest.approx(MINUTELY[sym][-1], rel=1e-12)
+
+
+def test_stats_table_windows_match_numpy(spark, lambda_tables):
+    from pyspark.sql import functions as F
+
+    ts = M0 + np.arange(MINUTES) * MINUTE_MS
+    for r in (versioned.read_version(spark, lambda_tables["stats"])
+              .select("symbol", F.unix_millis("window_start").alias("s"), "avg_close",
+                      "min_close", "max_close", "n_candles").collect()):
+        want = MINUTELY[r["symbol"].replace("/", "_")][(ts >= r["s"]) & (ts < r["s"] + 10 * MINUTE_MS)]
+        assert r["n_candles"] == len(want) > 0
+        assert r["avg_close"] == pytest.approx(want.mean(), rel=1e-12)
+        assert (r["min_close"], r["max_close"]) == (want.min(), want.max())
+
+
+@pytest.mark.parametrize("sym", SYMS)
+def test_chart_last_35_minutes(server, sym):
+    code, body = _get(server, f"/api/chart_data_1m/{sym.replace('_', '-')}")
+    assert code == 200
+    keep = [i for i in range(MINUTES) if M0 + i * MINUTE_MS >= NEWEST_M - 35 * MINUTE_MS]
+    assert [p[0] for p in body] == [M0 + i * MINUTE_MS for i in keep]
+    np.testing.assert_allclose([p[1] for p in body], MINUTELY[sym][keep], rtol=1e-12)
+
+
+@pytest.mark.parametrize("sym", SYMS)
+def test_forecast_replays_in_numpy(server, sym):
+    code, body = _get(server, f"/api/predict_xgboost/{sym}_1h")
+    assert code == 200
+    last = H0 + (HOURS + UPDATE_HOURS - 1) * HOUR_MS
+    assert [p["timestamp"] for p in body] == [last + i * HOUR_MS for i in range(1, 25)]
+    np.testing.assert_allclose([p["predicted_price"] for p in body], _replay(sym), rtol=1e-9)
+
+
+def test_cli_forecast_reads_the_batch_table(lambda_tables, tmp_path, capsys, monkeypatch):
+    monkeypatch.setattr(xgb_ubjson, "load_reference_regressor", lambda _p: (_Model(), {}))
+    monkeypatch.setattr(artifacts, "load_minmax_scaler", lambda _p: _scaler("ETH_USDT"))
+    capsys.readouterr()
+    assert main(["forecast", "--symbol", "ETH_USDT", "--artifacts", str(tmp_path),
+                 "--hist", lambda_tables["hist"], "--steps", "24"]) == 0
+    got = [json.loads(x)["predicted_price"] for x in capsys.readouterr().out.splitlines()]
+    assert got == pytest.approx(_replay("ETH_USDT"), abs=0.006)
+
+
+def test_pages_list_both_symbol_forms(server):
+    code, body = _get(server, "/")
+    assert code == 200
+    assert all(f'value="{s.replace("_", "/")}"' in body for s in SYMS)
+    code, body = _get(server, "/historical")
+    assert code == 200
+    assert all(f'value="{s}_1h"' in body for s in SYMS)
+
+
+@pytest.mark.parametrize("table", ["hist", "latest", "stats"])
+def test_plain_hive_read_of_table_root_is_current_version(spark, lambda_tables, table):
+    """Outside readers (and the benchmark's table check) read the root
+    as one hive dataset: at rest it holds exactly the current version."""
+    import pyarrow.dataset as ds
+
+    path = lambda_tables[table]
+    assert [d for d in os.listdir(path) if d.startswith("v")] == [
+        os.path.basename(versioned.version_dir(path, versioned.current_version(path)))
+    ]
+    got = ds.dataset(path, format="parquet", partitioning="hive").to_table()
+    want = versioned.read_version(spark, path)
+    key = "symbol" if table == "latest" else "doc_id"
+    assert sorted(got.column(key).to_pylist()) == sorted(r[key] for r in want.select(key).collect())
+    assert got.num_rows == {"hist": 2 * (HOURS + UPDATE_HOURS), "latest": 2}.get(table, got.num_rows)

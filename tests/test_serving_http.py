@@ -2,8 +2,10 @@
 parity with reference app.py:86-244 — payload shapes, symbol decoding,
 the Chart.js dataset contract, and the full error contract (400/404
 with the reference's message shapes). The server runs in-process on an
-ephemeral port against tiny parquet-shaped DataFrames; the predict
-endpoint exercises the REAL reference artifacts when present."""
+ephemeral port against tiny versioned tables in the layers' stored
+forms (underscore symbols in hist, slash symbols and ``@timestamp`` in
+the stream tables); the predict endpoint exercises the REAL reference
+artifacts when present."""
 
 from __future__ import annotations
 
@@ -15,6 +17,7 @@ import urllib.request
 import pytest
 
 from big_data_pr_spark.ohlcv.serving_http import ServingBackend, start_server
+from big_data_pr_spark.operators import versioned
 
 BASE_MS = 1_700_000_000_000
 
@@ -27,15 +30,21 @@ def _get(port: int, path: str):
         return e.code, e.read().decode(), e.headers.get("Content-Type")
 
 
+def _table(df, path, partition_by=()):
+    versioned.write_version(df, str(path), partition_by=partition_by)
+    return str(path)
+
+
 @pytest.fixture(scope="module")
-def server(spark):
+def server(spark, tmp_path_factory):
     from pyspark.sql import functions as F
 
+    tdir = tmp_path_factory.mktemp("serving")
     closes = [80000.0, 80900.0, 80400.0, 81300.0, 80700.0, 81100.0,
               80500.0, 81250.0]
     hist = spark.createDataFrame(
-        [("BTC/USDT", "1h", i, c, c - 10, c - 20) for i, c in enumerate(closes)]
-        + [("ETH/USDT", "1h", i, 2000.0 + i, 1990.0 + i, 1980.0 + i)
+        [("BTC_USDT", "1h", i, c, c - 10, c - 20) for i, c in enumerate(closes)]
+        + [("ETH_USDT", "1h", i, 2000.0 + i, 1990.0 + i, 1980.0 + i)
            for i in range(3)],
         "symbol string, timeframe string, hour int, close double, "
         "sma_7 double, sma_30 double",
@@ -61,15 +70,15 @@ def server(spark):
         "symbol string, minute int, close double",
     ).selectExpr(
         "symbol",
-        f"timestamp_millis({BASE_MS} + minute * 60000) AS event_timestamp",
+        f"timestamp_millis({BASE_MS} + minute * 60000) AS `@timestamp`",
         "close",
     )
     now_col = F.expr(f"timestamp_millis({BASE_MS} + 39 * 60000)")
     backend = ServingBackend(
-        hist=hist,
-        latest=latest,
-        stats=stats,
-        chart=chart,
+        hist=_table(hist, tdir / "hist", ("symbol", "timeframe")),
+        latest=_table(latest, tdir / "latest"),
+        stats=_table(stats, tdir / "stats"),
+        chart=_table(chart, tdir / "chart"),
         artifacts_dir="/root/reference/trained_models",
         now_fn=lambda: now_col,
     )
@@ -248,13 +257,13 @@ def test_predict_configured_symbol_missing_model_404(spark, tmp_path):
         srv.shutdown()
 
 
-def test_pages_escape_markup_in_symbols(spark):
+def test_pages_escape_markup_in_symbols(spark, tmp_path):
     # the reference renders via auto-escaping Jinja templates; a symbol
     # containing markup must not be reflected verbatim (r9 advice)
     evil = spark.createDataFrame(
         [('<script>alert(1)</script>', 1.0)], "symbol string, close double"
     )
-    backend = ServingBackend(latest=evil)
+    backend = ServingBackend(latest=_table(evil, tmp_path / "latest"))
     srv, port = start_server(backend)
     try:
         code, body, _ = _get(port, "/")

@@ -10,6 +10,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from big_data_pr_spark.operators import versioned
 from big_data_pr_spark.streaming import pipeline
 
 T0_MS = 1_700_000_400_000  # 2023-11-14 22:20:00 UTC, minute-aligned
@@ -56,14 +57,14 @@ def test_three_query_topology(spark, tmp_path):
     _run_available(spark, input_dir, tmp_path / "out", tmp_path / "cp")
 
     # Q1 complete-mode snapshot: exactly one row per symbol, newest candle
-    latest = spark.read.parquet(str(tmp_path / "out" / "latest")).collect()
+    latest = versioned.read_version(spark, str(tmp_path / "out" / "latest")).collect()
     by_sym = {r["symbol"]: r for r in latest}
     assert set(by_sym) == {"BTC/USDT", "ETH/USDT"}
     assert by_sym["BTC/USDT"]["current_price"] == 111.0
     assert by_sym["BTC/USDT"]["timestamp_ms"] == T0_MS + 11 * 60_000
 
     # Q2 sliding windows: the window ending at minute 12 covers minutes 2-11
-    stats = spark.read.parquet(str(tmp_path / "out" / "stats"))
+    stats = versioned.read_version(spark, str(tmp_path / "out" / "stats"))
     row = stats.filter(
         (F.col("symbol") == "BTC/USDT")
         & (F.col("window_end") == F.timestamp_millis(F.lit(T0_MS + 12 * 60_000)))
@@ -94,7 +95,7 @@ def test_watermark_drops_late_rows_from_stats_not_chart(spark, tmp_path):
     _write_batch(input_dir, "b2.json", [_msg("BTC/USDT", 2, 999.0), _msg("BTC/USDT", 10, 110.0)])
     _run_available(spark, input_dir, out, cp)
 
-    stats = spark.read.parquet(str(out / "stats"))
+    stats = versioned.read_version(spark, str(out / "stats"))
     # windows fully before the watermark never saw the late 999 close
     polluted = stats.filter(F.col("max_close") >= 999.0).collect()
     assert all(
@@ -114,7 +115,7 @@ def test_watermark_drops_late_rows_from_stats_not_chart(spark, tmp_path):
     assert chart.count() == 12
 
     # the complete-mode snapshot reflects the true newest event (min 10)
-    latest = spark.read.parquet(str(out / "latest")).collect()[0]
+    latest = versioned.read_version(spark, str(out / "latest")).collect()[0]
     assert latest["current_price"] == 110.0
 
 
@@ -124,14 +125,14 @@ def test_stats_sink_idempotent_upsert(spark, tmp_path):
     out, cp = tmp_path / "out", tmp_path / "cp"
     _write_batch(input_dir, "b1.json", [_msg("BTC/USDT", m, 100.0 + m) for m in range(5)])
     _run_available(spark, input_dir, out, cp)
-    n1 = spark.read.parquet(str(out / "stats")).count()
-    ids1 = spark.read.parquet(str(out / "stats")).select("doc_id").distinct().count()
+    n1 = versioned.read_version(spark, str(out / "stats")).count()
+    ids1 = versioned.read_version(spark, str(out / "stats")).select("doc_id").distinct().count()
     assert n1 == ids1  # key-unique
 
     # updated window values overwrite, not duplicate
     _write_batch(input_dir, "b2.json", [_msg("BTC/USDT", 4, 200.0)])
     _run_available(spark, input_dir, out, cp)
-    stats = spark.read.parquet(str(out / "stats"))
+    stats = versioned.read_version(spark, str(out / "stats"))
     assert stats.count() == stats.select("doc_id").distinct().count()
     end5 = stats.filter(
         F.col("window_end") == F.timestamp_millis(F.lit(T0_MS + 5 * 60_000))
@@ -599,7 +600,7 @@ def test_bootstrap_watermark_bounds_batch0_state(spark, tmp_path):
     assert chart.agg(pipeline.F.min("@timestamp")).collect()[0][0] >= (
         dt.datetime.fromtimestamp((T0_MS + cutoff_min * 60_000) / 1000)
     ).replace(tzinfo=None)
-    latest = spark.read.parquet(str(tmp_path / "boot" / "out" / "latest")).collect()
+    latest = versioned.read_version(spark, str(tmp_path / "boot" / "out" / "latest")).collect()
     assert len(latest) == 1 and latest[0]["timestamp_ms"] == T0_MS + (minutes - 1) * 60_000
 
 

@@ -72,8 +72,10 @@ def test_merge_version_cdc_semantics(spark, tdir):
 def test_vacuum_keeps_latest_and_manifests(spark, tdir):
     for i in range(4):
         versioned.write_version(_df(spark, [(1, f"v{i + 1}")]), tdir)
+    os.makedirs(versioned.version_dir(tdir, 5))  # a write in flight, not committed
     dropped = versioned.vacuum(tdir, keep_last=2)
     assert dropped == [1, 2]
+    assert os.path.isdir(versioned.version_dir(tdir, 5))
     # history metadata survives vacuum
     assert [m["version"] for m in versioned.versions(tdir)] == [1, 2, 3, 4]
     with pytest.raises(FileNotFoundError):
