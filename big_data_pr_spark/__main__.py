@@ -131,57 +131,30 @@ def cmd_forecast(args: argparse.Namespace) -> int:
     state, the last-k closes come from the hist table (or a synthetic
     ramp when none is given), and the 24-step scaled-space recursion
     emits [(ts_ms, price)] as JSON lines."""
-    import json as _json
-    import os as _os
+    from .ohlcv import forecast
 
-    from .ohlcv.forecast import recursive_forecast
-    from .ohlcv.artifacts import load_minmax_scaler
-    from .ohlcv.xgb_ubjson import load_reference_regressor
-
-    model_pkl = _os.path.join(
-        args.artifacts, f"{args.symbol}_xgboost_model.pkl"
-    )
-    scaler_pkl = _os.path.join(args.artifacts, f"{args.symbol}_scaler.pkl")
-    model, _params = load_reference_regressor(model_pkl)
-    scaler = load_minmax_scaler(scaler_pkl)
-    k = model.n_features_in_
+    model, scaler = forecast.load_symbol_artifacts(args.artifacts, args.symbol)
     if args.hist:
-        from .ohlcv import serving
-        from .ohlcv.schemas import symbol_key
         from .operators import versioned
         from .session import get_spark
 
         hist = versioned.read_version(get_spark("forecast-cli"), args.hist)
-        rows = serving.model_input_topk(
-            hist, symbol_key(args.symbol, "hist"), "1h", k
-        ).collect()
-        if len(rows) < k:
-            # reference contract (app.py:226-227): explicit found/need
-            # error instead of an IndexError / opaque feature-count
-            # message when the hist table is too short
-            print(
-                _json.dumps(
-                    {
-                        "error": "not enough recent historical data for "
-                        f"{args.symbol} (found {len(rows)}, need {k})"
-                    }
-                ),
-                file=sys.stderr,
+        try:
+            preds = forecast.forecast_from_hist(
+                lambda build: build(hist).collect(), model, scaler, args.symbol, args.steps
             )
+        except forecast.InsufficientHistory as exc:
+            print(json.dumps({"error": str(exc)}), file=sys.stderr)
             return 1
-        closes = [float(r["close"]) for r in rows]
-        last_ms = int(rows[-1]["timestamp_dt"].timestamp() * 1000)
     else:
+        k = model.n_features_in_
         mid = (scaler.data_min_[0] + scaler.data_max_[0]) / 2
         closes = [mid * (1 + 0.001 * i) for i in range(k)]
-        last_ms = 0
-    preds = recursive_forecast(
-        closes, last_ms, steps=args.steps, model=model, scaler=scaler
-    )
+        preds = forecast.recursive_forecast(
+            closes, 0, steps=args.steps, model=model, scaler=scaler
+        )
     for ts, price in preds:
-        print(_json.dumps(
-            {"timestamp": ts, "predicted_price": round(price, 2)}
-        ))
+        print(json.dumps({"timestamp": ts, "predicted_price": round(price, 2)}))
     return 0
 
 

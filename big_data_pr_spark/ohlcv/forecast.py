@@ -23,11 +23,15 @@ For many-symbol batch inference the same ``step()`` runs inside
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from . import artifacts, serving, xgb_ubjson
+from .schemas import symbol_key
 
 HOUR_MS = 3_600_000
 
@@ -106,25 +110,43 @@ def recursive_forecast(
     return out
 
 
-def load_artifacts(model_path: str, scaler_path: str):
-    """Load the reference's model artifacts (``app.py:22-23,207-218``).
+class InsufficientHistory(ValueError):
+    """The hist table holds fewer closes than the model's window."""
 
-    With joblib+xgboost installed this is the reference's exact load
-    path; without them (this container) the restricted unpickler +
-    UBJSON booster decoder recover the SAME fitted state — real trees,
-    real scaler parameters — so the serving path needs no stub (see
-    :mod:`.artifacts` / :mod:`.xgb_ubjson`;
-    tests/test_artifacts.py proves recursion parity)."""
-    try:
-        import joblib  # noqa: PLC0415
-        import xgboost  # noqa: F401, PLC0415
-        return joblib.load(model_path), joblib.load(scaler_path)
-    except ImportError:
-        from .artifacts import load_minmax_scaler  # noqa: PLC0415
-        from .xgb_ubjson import load_reference_regressor  # noqa: PLC0415
 
-        model, _params = load_reference_regressor(model_path)
-        return model, load_minmax_scaler(scaler_path)
+def load_symbol_artifacts(artifacts_dir: str, symbol: str):
+    """(model, scaler) of ``symbol`` from the reference's pickled
+    artifacts (``app.py:207-218``): the restricted unpickler + UBJSON
+    booster decoder recover the fitted state without xgboost/sklearn
+    (:mod:`.artifacts`, :mod:`.xgb_ubjson`)."""
+    model_pkl = os.path.join(artifacts_dir, f"{symbol}_xgboost_model.pkl")
+    model, _params = xgb_ubjson.load_reference_regressor(model_pkl)
+    scaler = artifacts.load_minmax_scaler(os.path.join(artifacts_dir, f"{symbol}_scaler.pkl"))
+    return model, scaler
+
+
+def forecast_from_hist(query, model, scaler, symbol: str, steps: int) -> list | None:
+    """The ``/api/predict_xgboost`` forecast (``app.py:219-240``), shared
+    by the HTTP route and the ``forecast`` CLI: the newest ``k =
+    model.n_features_in_`` hourly closes of ``symbol`` (any URL form)
+    from the ``hist`` table, then :func:`recursive_forecast`.
+
+    ``query(build)`` runs ``build(hist_df)`` on the hist table and
+    returns its rows, or None when there is no table — then so does
+    this. Fewer than k rows raise :class:`InsufficientHistory` with the
+    reference's found/need message (``app.py:226-227``)."""
+    k = model.n_features_in_
+    sym = symbol_key(symbol, "hist")
+    rows = query(lambda hist: serving.model_input_topk(hist, sym, "1h", k))
+    if rows is None:
+        return None
+    if len(rows) < k:
+        raise InsufficientHistory(
+            f"Not enough recent historical data for {symbol} (found {len(rows)}, need {k})."
+        )
+    closes = [float(r["close"]) for r in rows]
+    last_ms = int(rows[-1]["timestamp_dt"].timestamp() * 1000)
+    return recursive_forecast(closes, last_ms, steps=steps, model=model, scaler=scaler)
 
 
 def forecast_all_symbols(

@@ -10,6 +10,8 @@ Shapes match the reference's input contracts:
 
 from __future__ import annotations
 
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # Raw candle CSV (timestamp is epoch MILLISECONDS, candle open time).
@@ -63,3 +65,10 @@ def symbol_key(symbol: str, table: str) -> str:
     the stream tables (``latest``, ``stats``, ``chart``) on the feed's
     slash form."""
     return symbol.translate(str.maketrans("-_/", ("_" if table == "hist" else "/") * 3))
+
+
+def url_symbol(col: Column) -> Column:
+    """F3: the URL/doc-key symbol form, ``/`` → ``-`` (reference
+    ``app.py:94``, ``stream_processor.py:134``); :func:`symbol_key`
+    maps it back to a table's stored form."""
+    return F.replace(col, F.lit("/"), F.lit("-"))

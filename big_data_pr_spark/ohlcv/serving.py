@@ -22,17 +22,6 @@ from ..operators.windows import topk
 from .schemas import CHART_TS
 
 
-def encode_symbol(col: Column) -> Column:
-    """F3: URL/key-safe symbol form ``/`` → ``-``
-    (reference ``app.py:94``, ``stream_processor.py:134``)."""
-    return F.replace(col, F.lit("/"), F.lit("-"))
-
-
-def decode_symbol(col: Column) -> Column:
-    """F3 inverse: ``-``/``_`` → ``/`` (reference ``app.py:111``)."""
-    return F.replace(col, F.lit("-"), F.lit("/"))
-
-
 def distinct_symbols(hist: DataFrame) -> DataFrame:
     """GET / dropdown: distinct symbols sorted (reference ``app.py:46-64``,
     ES terms agg size 500 — unbounded here; exact distinct scales as one

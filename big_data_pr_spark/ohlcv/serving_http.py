@@ -64,7 +64,7 @@ from pyspark.sql import functions as F
 
 from ..operators import versioned
 from ..operators.windows import top1_per_key
-from . import serving
+from . import forecast, serving
 from .schemas import CHART_SCHEMA, CHART_TS, symbol_key
 
 PREDICTION_STEPS_XGBOOST = 24  # app.py:23
@@ -140,8 +140,10 @@ class ServingBackend:
             cached = self.plans.get(table)
             if cached is None or cached[0] != got[0]:
                 reader = SparkSession.builder.getOrCreate().read
-                if table == "chart":  # declared: readable before the first epoch
-                    reader = reader.schema(CHART_SCHEMA)
+                if table == "chart":
+                    # declared: readable before the first epoch; retention
+                    # drops partitions whose files the sink's log still lists
+                    reader = reader.schema(CHART_SCHEMA).option("ignoreMissingFiles", "true")
                 cached = self.plans[table] = (got[0], reader.parquet(got[1]))
             return cached
 
@@ -273,32 +275,16 @@ class ServingBackend:
             return {"error": f"Model for {symbol_req} not found."}, 404
         if not os.path.exists(scaler_pkl):
             return {"error": f"Scaler for {symbol_req} not found."}, 404
-        from .artifacts import load_minmax_scaler
-        from .forecast import recursive_forecast
-        from .xgb_ubjson import load_reference_regressor
-
-        model, _params = load_reference_regressor(model_pkl)
-        scaler = load_minmax_scaler(scaler_pkl)
-        k = model.n_features_in_
-        sym = symbol_key(symbol_req, "hist")
-        rows = self._query(
-            "hist", lambda df: serving.model_input_topk(df, sym, timeframe_req, k))
-        if rows is None:
+        model, scaler = forecast.load_symbol_artifacts(self.artifacts_dir, symbol_req)
+        try:
+            preds = forecast.forecast_from_hist(
+                lambda build: self._query("hist", build), model, scaler,
+                symbol_req, PREDICTION_STEPS_XGBOOST,
+            )
+        except forecast.InsufficientHistory as exc:
+            return {"error": str(exc)}, 404
+        if preds is None:
             return {"error": "No historical table configured."}, 404
-        if len(rows) < k:
-            return {
-                "error": f"Not enough recent historical data for "
-                f"{symbol_req} (found {len(rows)}, need {k})."
-            }, 404
-        closes = [float(r["close"]) for r in rows]
-        last_ms = _ts_ms(rows[-1]["timestamp_dt"])
-        preds = recursive_forecast(
-            closes,
-            last_ms,
-            steps=PREDICTION_STEPS_XGBOOST,
-            model=model,
-            scaler=scaler,
-        )
         return [
             {"timestamp": ts, "predicted_price": float(p)} for ts, p in preds
         ], 200

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..fsutil import require_local
+from ..streaming import start_foreach_batch
 from .similarity import _assign_cell_udf, cosine, ivf_centroids
 
 
@@ -170,9 +171,4 @@ def stream_into_ivf_index(
         with open(marker, "w") as f:
             f.write("")
 
-    return (
-        vec_stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(vec_stream, sink, checkpoint_dir, None, "append")

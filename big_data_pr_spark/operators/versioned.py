@@ -21,6 +21,10 @@ version's rows; so does a Spark read of a partitioned table's root
 with ``recursiveFileLookup``, so Spark readers use :func:`read_version`,
 as serving does — it reads by pointer and never depends on vacuuming.
 
+The streaming sketch sinks (``streaming/*_sink.py``) fold each
+micro-batch into a state table through :func:`fold_epoch`, which
+commits the epoch id with the state so a replayed epoch is a no-op.
+
 Scale posture: data directories are written by the cluster like any
 parquet output; the version manifest and pointer are O(bytes) driver
 metadata. Pointer atomicity relies on ``os.rename``, so tables must be
@@ -40,7 +44,7 @@ import json
 import os
 import shutil
 import time
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -126,6 +130,38 @@ def write_version(
         f.write(str(ver))
     os.rename(tmp, os.path.join(table_dir, _POINTER))
     return ver
+
+
+def fold_epoch(
+    batch_df: DataFrame,
+    epoch_id: int,
+    state_dir: str,
+    step: Callable[[DataFrame | None, dict], tuple[DataFrame, dict]],
+) -> int | None:
+    """Exactly-once fold of one streaming micro-batch into the state
+    table at ``state_dir``; returns the committed version, or None when
+    nothing was committed.
+
+    ``step(prev, prev_extra) -> (state, extra)`` gets the committed
+    state (None before the first commit) and its manifest ``extra``
+    ({} before the first commit). The new state commits with
+    ``epoch_id`` merged into ``extra``, as one version, so a
+    crash-replayed micro-batch (``foreachBatch`` is at-least-once) finds
+    its epoch already committed and no-ops. An empty batch commits
+    nothing."""
+    if batch_df.isEmpty():
+        return None
+    cur = current_version(state_dir)
+    prev, prev_extra = None, {}
+    if cur is not None:
+        prev_extra = manifest(state_dir, cur).get("extra", {})
+        if epoch_id <= prev_extra.get("epoch_id", -1):
+            return None  # crash-replayed micro-batch: already folded
+        prev = read_version(batch_df.sparkSession, state_dir, cur)
+    state, extra = step(prev, prev_extra)
+    return write_version(
+        state, state_dir, note=f"epoch {epoch_id}", extra={**extra, "epoch_id": epoch_id}
+    )
 
 
 def read_version(

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.versioned import merge_version
+from . import start_foreach_batch
 
 CHANGE_SCHEMA = (
     "key LONG, op STRING, seq LONG, payload STRING"
@@ -81,12 +82,6 @@ def start_versioned_cdc_apply(
             note=f"stream epoch {epoch_id}",
         )
 
-    trig = {"processingTime": trigger} if trigger else {"availableNow": True}
-    return (
-        changes.writeStream.outputMode("append")
-        .foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**trig)
-        .queryName("versioned_cdc_apply")
-        .start()
+    return start_foreach_batch(
+        changes, apply_batch, checkpoint_dir, trigger, "append", "versioned_cdc_apply"
     )

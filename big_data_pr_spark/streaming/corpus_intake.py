@@ -39,6 +39,7 @@ from pyspark.sql.types import (
 )
 
 from ..operators import text
+from . import trigger_kwargs
 
 DOC_SCHEMA = StructType(
     [
@@ -79,19 +80,19 @@ def start_intake(
     cleaned: DataFrame,
     out_dir: str,
     checkpoint: str,
-    trigger: dict | None = None,
+    trigger: str | None = None,
 ):
     """Append the cleaned stream to date-partitioned parquet staging.
-    ``trigger=None`` → availableNow (drain-and-stop, used by tests and
-    backfills); pass ``{"processingTime": "1 minute"}`` for continuous
-    ingest."""
-    writer = (
+    ``trigger`` is a processingTime string (e.g. ``"1 minute"``) for
+    continuous ingest; ``None`` → availableNow (drain-and-stop, used by
+    tests and backfills)."""
+    return (
         cleaned.withColumn("ingest_date", F.to_date("fetched_at"))
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint)
         .partitionBy("ingest_date")
         .outputMode("append")
+        .trigger(**trigger_kwargs(trigger))
+        .start()
     )
-    writer = writer.trigger(**(trigger or {"availableNow": True}))
-    return writer.start()

@@ -28,9 +28,9 @@ registers remain — one single-row aggregate, no collect of the
 register table.
 
 Exactly-once: each trigger commits (registers, n_total, epoch_id) as
-ONE MVCC version (operators/versioned.py — the topk_sink/matview_sink
-pattern); a crash-replayed micro-batch sees its epoch_id already
-committed and no-ops.
+ONE MVCC version through ``versioned.fold_epoch``; a crash-replayed
+micro-batch sees its epoch_id already committed and no-ops. The query
+starts through the streaming package's ``start_foreach_batch``.
 """
 
 from __future__ import annotations
@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import versioned
+from . import start_foreach_batch
 
 P = 8
 M = 1 << P  # 256 registers
@@ -91,26 +92,14 @@ def fold_batch(
 ) -> None:
     """Fold one micro-batch's registers into the versioned state.
     Public so replay idempotency is directly testable."""
-    if batch_df.isEmpty():
-        return
-    spark = batch_df.sparkSession
-    cur = versioned.current_version(state_dir)
-    n_prev = 0
-    if cur is not None:
-        extra = versioned.manifest(state_dir).get("extra", {})
-        if epoch_id <= extra.get("epoch_id", -1):
-            return  # crash-replayed micro-batch: already folded
-        n_prev = extra.get("n_total", 0)
-    regs = batch_registers(batch_df, key_col)
-    n_batch = batch_df.count()
-    if cur is not None:
-        regs = merge_registers(versioned.read_version(spark, state_dir), regs)
-    versioned.write_version(
-        regs,
-        state_dir,
-        note=f"epoch {epoch_id}",
-        extra={"epoch_id": epoch_id, "n_total": n_prev + n_batch, "p": P},
-    )
+
+    def step(prev: DataFrame | None, extra: dict) -> tuple[DataFrame, dict]:
+        regs = batch_registers(batch_df, key_col)
+        if prev is not None:
+            regs = merge_registers(prev, regs)
+        return regs, {"n_total": extra.get("n_total", 0) + batch_df.count(), "p": P}
+
+    versioned.fold_epoch(batch_df, epoch_id, state_dir, step)
 
 
 def start_distinct_count_stream(
@@ -124,14 +113,7 @@ def start_distinct_count_stream(
     ``state_dir``. ``trigger`` is a processingTime string; ``None`` ->
     availableNow."""
 
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        fold_batch(batch_df, epoch_id, key_col, state_dir)
-
-    trig = {"processingTime": trigger} if trigger else {"availableNow": True}
-    return (
-        stream.writeStream.outputMode("update")
-        .foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**trig)
-        .start()
+    return start_foreach_batch(
+        stream, lambda df, eid: fold_batch(df, eid, key_col, state_dir),
+        checkpoint_dir, trigger, "update",
     )

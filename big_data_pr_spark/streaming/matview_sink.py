@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import matview
+from . import start_foreach_batch
 
 
 def start_matview_refresh(
@@ -45,11 +46,4 @@ def start_matview_refresh(
             return
         matview.refresh(batch_df.sparkSession, mv_dir, batch_df)
 
-    trig = {"processingTime": trigger} if trigger else {"availableNow": True}
-    return (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**trig)
-        .start()
-    )
+    return start_foreach_batch(stream, fold, checkpoint_dir, trigger, "append")

@@ -37,12 +37,13 @@ import os
 import shutil
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..ohlcv.schemas import CHART_FIELDS, CHART_TS, OHLCV_STREAM_SCHEMA
+from ..ohlcv.schemas import CHART_FIELDS, CHART_TS, OHLCV_STREAM_SCHEMA, url_symbol
 from ..operators import versioned
+from . import start_foreach_batch, trigger_kwargs
 
 WINDOW_DURATION = os.environ.get("OHLCV_WINDOW_DURATION", "10 minutes")
 SLIDE_DURATION = os.environ.get("OHLCV_SLIDE_DURATION", "1 minute")
@@ -140,21 +141,25 @@ class EpochCounts:
         return listener
 
 
+def _message() -> Column:
+    """The Kafka ``value`` payload parsed as struct ``d``."""
+    return F.from_json(F.col("value").cast("string"), OHLCV_STREAM_SCHEMA).alias("d")
+
+
+def _candle_columns() -> list[Column]:
+    """The canonical candle columns projected out of ``d``."""
+    fields = ("symbol", "timeframe", "open", "high", "low", "close", "volume")
+    return [
+        F.col("d.timestamp").alias("timestamp_ms"),
+        *[F.col(f"d.{c}").alias(c) for c in fields],
+        F.timestamp_millis(F.col("d.timestamp")).alias("event_timestamp"),
+    ]
+
+
 def parse_stream(raw: DataFrame) -> DataFrame:
     """P1-P4: CAST value AS STRING → from_json(schema) → canonical
     columns + event_timestamp (reference ``stream_processor.py:63-74``)."""
-    data = F.from_json(F.col("value").cast("string"), OHLCV_STREAM_SCHEMA).alias("d")
-    return raw.select(data).select(
-        F.col("d.timestamp").alias("timestamp_ms"),
-        F.col("d.symbol").alias("symbol"),
-        F.col("d.timeframe").alias("timeframe"),
-        F.col("d.open").alias("open"),
-        F.col("d.high").alias("high"),
-        F.col("d.low").alias("low"),
-        F.col("d.close").alias("close"),
-        F.col("d.volume").alias("volume"),
-        F.timestamp_millis(F.col("d.timestamp")).alias("event_timestamp"),
-    )
+    return raw.select(_message()).select(*_candle_columns())
 
 
 def latest_snapshot(parsed: DataFrame) -> DataFrame:
@@ -202,7 +207,7 @@ def window_stats(
             "n_candles",
             # F2: stable doc key `{sym}_stats_{epoch(window_end)}`
             F.concat(
-                F.replace(F.col("symbol"), F.lit("/"), F.lit("-")),
+                url_symbol(F.col("symbol")),
                 F.lit("_stats_"),
                 F.unix_seconds(F.col("w.end")).cast("string"),
             ).alias("doc_id"),
@@ -217,7 +222,7 @@ def raw_chart(parsed: DataFrame) -> DataFrame:
     derived = {
         CHART_TS: F.col("event_timestamp"),
         "doc_id": F.concat(
-            F.replace(F.col("symbol"), F.lit("/"), F.lit("-")),
+            url_symbol(F.col("symbol")),
             F.lit("_1m_"),
             F.col("timestamp_ms").cast("string"),
         ),
@@ -401,29 +406,17 @@ def start_three_queries(
             F.col("event_timestamp") >= F.lit(bootstrap_watermark).cast("timestamp")
         )
     trig = triggers or {}
-
-    def trigger_kwargs(name: str) -> dict:
-        return (
-            {"processingTime": trig[name]} if name in trig else {"availableNow": True}
-        )
-
-    latest_q = (
-        latest_snapshot(parsed)
-        .writeStream.outputMode("complete")
-        .foreachBatch(lambda df, _eid: _overwrite_keyed(df, f"{out_dir}/latest"))
-        .option("checkpointLocation", f"{checkpoint_dir}/latest_ohlcv")
-        .trigger(**trigger_kwargs("latest"))
-        .queryName("latest_snapshot")
-        .start()
+    # the sinks are looked up when called, so wrappers of the module
+    # attributes see every epoch
+    latest_q = start_foreach_batch(
+        latest_snapshot(parsed),
+        lambda df, _eid: _overwrite_keyed(df, f"{out_dir}/latest"),
+        f"{checkpoint_dir}/latest_ohlcv", trig.get("latest"), "complete", "latest_snapshot",
     )
-    stats_q = (
-        window_stats(parsed)
-        .writeStream.outputMode("update")
-        .foreachBatch(lambda df, _eid: _upsert_keyed(df, f"{out_dir}/stats"))
-        .option("checkpointLocation", f"{checkpoint_dir}/ohlcv_stats")
-        .trigger(**trigger_kwargs("stats"))
-        .queryName("window_stats")
-        .start()
+    stats_q = start_foreach_batch(
+        window_stats(parsed),
+        lambda df, _eid: _upsert_keyed(df, f"{out_dir}/stats"),
+        f"{checkpoint_dir}/ohlcv_stats", trig.get("stats"), "update", "window_stats",
     )
     chart_q = (
         raw_chart(parsed)
@@ -432,7 +425,7 @@ def start_three_queries(
         .option("path", f"{out_dir}/chart")
         .partitionBy("event_date")
         .option("checkpointLocation", f"{checkpoint_dir}/raw_ohlcv_chart")
-        .trigger(**trigger_kwargs("chart"))
+        .trigger(**trigger_kwargs(trig.get("chart")))
         .queryName("raw_chart")
         .start()
     )
@@ -443,7 +436,9 @@ def apply_retention(chart_path: str, keep_dates: Sequence[str]) -> list[str]:
     """T9: retention job replacing the reference's ES ILM 2-hour delete
     (``README.md:74-98``) — drop event_date partitions not in
     ``keep_dates``. On a real cluster this is a metadata-only partition
-    drop (or Delta ``VACUUM``); here, directory removal."""
+    drop (or Delta ``VACUUM``); here, directory removal. The file sink's
+    ``_spark_metadata`` log still lists the dropped files, so readers of
+    the chart set ``ignoreMissingFiles`` (as ``serve`` does)."""
     dropped = []
     if not os.path.isdir(chart_path):
         return dropped
@@ -470,18 +465,9 @@ def parse_stream_tagged(raw: DataFrame) -> DataFrame:
     ingest (queries/stat_queries.py::jsonl_corrupt_quarantine) — the
     reference's Kafka feed is exactly such a dirty JSON-lines source
     (stream_processor.py:63-74, which crashes the epoch on bad input)."""
-    data = F.from_json(F.col("value").cast("string"), OHLCV_STREAM_SCHEMA).alias("d")
-    return raw.select(F.col("value").cast("string").alias("raw"), data).select(
+    return raw.select(F.col("value").cast("string").alias("raw"), _message()).select(
         "raw",
-        F.col("d.timestamp").alias("timestamp_ms"),
-        F.col("d.symbol").alias("symbol"),
-        F.col("d.timeframe").alias("timeframe"),
-        F.col("d.open").alias("open"),
-        F.col("d.high").alias("high"),
-        F.col("d.low").alias("low"),
-        F.col("d.close").alias("close"),
-        F.col("d.volume").alias("volume"),
-        F.timestamp_millis(F.col("d.timestamp")).alias("event_timestamp"),
+        *_candle_columns(),
         (
             F.col("d").isNull()
             | F.col("d.timestamp").isNull()
@@ -527,12 +513,6 @@ def start_parse_with_dlq(
         finally:
             df.unpersist()
 
-    kwargs = {"processingTime": trigger} if trigger else {"availableNow": True}
-    return (
-        tagged.writeStream.outputMode("append")
-        .foreachBatch(split)
-        .option("checkpointLocation", f"{checkpoint_dir}/parse_dlq")
-        .trigger(**kwargs)
-        .queryName("parse_with_dlq")
-        .start()
+    return start_foreach_batch(
+        tagged, split, f"{checkpoint_dir}/parse_dlq", trigger, "append", "parse_with_dlq"
     )

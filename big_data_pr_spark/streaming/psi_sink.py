@@ -17,10 +17,11 @@ with epsilon-floored proportions, appends the per-epoch PSI to the
 state, and raises the standard alarm at PSI > 0.2 (industry rule of
 thumb: < 0.1 stable, 0.1-0.2 drifting, > 0.2 action).
 
-State = the B reference bins + a one-row summary (latest PSI, alarm
-streak) per version, epoch id in the manifest — the topk_sink /
-sprt_sink exactly-once pattern: a crash-replayed micro-batch sees its
-epoch already committed and no-ops.
+State = the B reference bins per version, with the latest PSI, alarm
+streak and epoch id in the manifest, committed by
+``versioned.fold_epoch``: a crash-replayed micro-batch sees its epoch
+already committed and no-ops. The query starts through the streaming
+package's ``start_foreach_batch``.
 """
 
 from __future__ import annotations
@@ -32,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import versioned
+from . import start_foreach_batch
 
 _EPS = 1e-6
 
@@ -64,70 +66,37 @@ def fold_batch(
 ) -> None:
     """Fold one micro-batch into the drift state. Public for direct
     testing of the reference pin, the PSI math, and replay no-ops."""
-    if batch_df.isEmpty():
-        return
-    spark = batch_df.sparkSession
-    cur = versioned.current_version(state_dir)
-    if cur is not None:
-        extra = versioned.manifest(state_dir).get("extra", {})
-        if epoch_id <= extra.get("epoch_id", -1):
-            return  # crash-replayed micro-batch
-        lo, hi = extra["lo"], extra["hi"]
-        ref = [
-            r["p_ref"]
-            for r in versioned.read_version(spark, state_dir)
-            .orderBy("bin")
-            .collect()
-        ]
-        p_cur = _bin_props(batch_df, value_col, lo, hi, bins)
-        psi = sum(
-            (max(c, _EPS) - max(r, _EPS))
-            * math.log(max(c, _EPS) / max(r, _EPS))
-            for c, r in zip(p_cur, ref)
+
+    def step(prev: DataFrame | None, extra: dict) -> tuple[DataFrame, dict]:
+        if prev is None:
+            # first epoch: freeze the reference distribution AND its bin edges
+            agg = batch_df.agg(
+                F.min(value_col).alias("lo"), F.max(value_col).alias("hi")
+            ).collect()[0]
+            lo, hi = float(agg["lo"]), float(agg["hi"])
+            if hi <= lo:
+                hi = lo + 1.0
+            ref = _bin_props(batch_df, value_col, lo, hi, bins)
+            psi, alarm, streak = 0.0, False, 0
+        else:
+            lo, hi = extra["lo"], extra["hi"]
+            ref = [r["p_ref"] for r in prev.orderBy("bin").collect()]
+            p_cur = _bin_props(batch_df, value_col, lo, hi, bins)
+            psi = sum(
+                (max(c, _EPS) - max(r, _EPS))
+                * math.log(max(c, _EPS) / max(r, _EPS))
+                for c, r in zip(p_cur, ref)
+            )
+            alarm = psi > alarm_at
+            streak = extra.get("alarm_streak", 0) + 1 if alarm else 0
+        state = batch_df.sparkSession.createDataFrame(
+            list(enumerate(ref)), "bin int, p_ref double"
         )
-        streak = extra.get("alarm_streak", 0)
-        streak = streak + 1 if psi > alarm_at else 0
-        state = spark.createDataFrame(
-            [(b, ref[b]) for b in range(bins)], "bin int, p_ref double"
-        )
-        versioned.write_version(
-            state,
-            state_dir,
-            note=f"epoch {epoch_id}",
-            extra={
-                "epoch_id": epoch_id,
-                "lo": lo,
-                "hi": hi,
-                "psi": psi,
-                "alarm": psi > alarm_at,
-                "alarm_streak": streak,
-            },
-        )
-        return
-    # first epoch: freeze the reference distribution AND its bin edges
-    agg = batch_df.agg(
-        F.min(value_col).alias("lo"), F.max(value_col).alias("hi")
-    ).collect()[0]
-    lo, hi = float(agg["lo"]), float(agg["hi"])
-    if hi <= lo:
-        hi = lo + 1.0
-    ref = _bin_props(batch_df, value_col, lo, hi, bins)
-    state = spark.createDataFrame(
-        [(b, ref[b]) for b in range(bins)], "bin int, p_ref double"
-    )
-    versioned.write_version(
-        state,
-        state_dir,
-        note=f"epoch {epoch_id} (reference)",
-        extra={
-            "epoch_id": epoch_id,
-            "lo": lo,
-            "hi": hi,
-            "psi": 0.0,
-            "alarm": False,
-            "alarm_streak": 0,
-        },
-    )
+        return state, {
+            "lo": lo, "hi": hi, "psi": psi, "alarm": alarm, "alarm_streak": streak
+        }
+
+    versioned.fold_epoch(batch_df, epoch_id, state_dir, step)
 
 
 def start_psi_stream(
@@ -142,14 +111,7 @@ def start_psi_stream(
     """Monitor ``stream[value_col]`` drift at ``state_dir``. ``trigger``
     is a processingTime string; ``None`` -> availableNow."""
 
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        fold_batch(batch_df, epoch_id, value_col, state_dir, bins, alarm_at)
-
-    trig = {"processingTime": trigger} if trigger else {"availableNow": True}
-    return (
-        stream.writeStream.outputMode("update")
-        .foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**trig)
-        .start()
+    return start_foreach_batch(
+        stream, lambda df, eid: fold_batch(df, eid, value_col, state_dir, bins, alarm_at),
+        checkpoint_dir, trigger, "update",
     )

@@ -15,9 +15,10 @@ mergeable quantile sketch with relative-error guarantees"):
 - state is plain (sign, bkt, n) rows — merge is ``sum`` per bucket
   (associative + commutative), bounded by the log of the value RANGE,
   never the stream length;
-- replay safety comes from the epoch-id guard (sum is not idempotent),
-  committed with the state as ONE MVCC version — the hll/topk sink
-  pattern (operators/versioned.py);
+- replay safety comes from the epoch-id fence (sum is not idempotent),
+  committed with the state as ONE MVCC version by
+  ``versioned.fold_epoch``; the query starts through the streaming
+  package's ``start_foreach_batch``;
 - quantile estimates are one ordered cumulative scan over the bucket
   table; the returned value is the bucket's log-midpoint
   ``2·gamma^bkt/(gamma+1)``, guaranteeing |est-true|/true <= a.
@@ -32,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import versioned
+from . import start_foreach_batch
 
 ALPHA = 0.02  # relative-error target
 GAMMA = (1 + ALPHA) / (1 - ALPHA)
@@ -107,30 +109,15 @@ def fold_batch(
 ) -> None:
     """Fold one micro-batch's buckets into the versioned state. Public
     so replay idempotency is directly testable."""
-    if batch_df.isEmpty():
-        return
-    spark = batch_df.sparkSession
-    cur = versioned.current_version(state_dir)
-    n_prev = 0
-    if cur is not None:
-        extra = versioned.manifest(state_dir).get("extra", {})
-        if epoch_id <= extra.get("epoch_id", -1):
-            return  # crash-replayed micro-batch: already folded
-        n_prev = extra.get("n_total", 0)
-    bks = batch_buckets(batch_df, val_col)
-    n_batch = batch_df.count()
-    if cur is not None:
-        bks = merge_buckets(versioned.read_version(spark, state_dir), bks)
-    versioned.write_version(
-        bks,
-        state_dir,
-        note=f"epoch {epoch_id}",
-        extra={
-            "epoch_id": epoch_id,
-            "n_total": n_prev + n_batch,
-            "alpha": ALPHA,
-        },
-    )
+
+    def step(prev: DataFrame | None, extra: dict) -> tuple[DataFrame, dict]:
+        bks = batch_buckets(batch_df, val_col)
+        if prev is not None:
+            bks = merge_buckets(prev, bks)
+        n_total = extra.get("n_total", 0) + batch_df.count()
+        return bks, {"n_total": n_total, "alpha": ALPHA}
+
+    versioned.fold_epoch(batch_df, epoch_id, state_dir, step)
 
 
 def current_quantiles(
@@ -151,14 +138,7 @@ def start_quantile_stream(
     ``state_dir``. ``trigger`` is a processingTime string; ``None`` ->
     availableNow."""
 
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        fold_batch(batch_df, epoch_id, val_col, state_dir)
-
-    trig = {"processingTime": trigger} if trigger else {"availableNow": True}
-    return (
-        stream.writeStream.outputMode("update")
-        .foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**trig)
-        .start()
+    return start_foreach_batch(
+        stream, lambda df, eid: fold_batch(df, eid, val_col, state_dir),
+        checkpoint_dir, trigger, "update",
     )

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..fsutil import fs_exists
+from . import start_foreach_batch
 
 GAP = "30 minutes"
 WATERMARK = "10 minutes"
@@ -132,14 +133,7 @@ def start_session_stream(
         ts_col=ts_col, val_col=val_col,
     )
 
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        _upsert_sessions(batch_df, out_path, key_col)
-
-    trig = {"processingTime": trigger} if trigger else {"availableNow": True}
-    return (
-        sessions.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**trig)
-        .start()
+    return start_foreach_batch(
+        sessions, lambda df, _eid: _upsert_sessions(df, out_path, key_col),
+        checkpoint_dir, trigger, "append",
     )

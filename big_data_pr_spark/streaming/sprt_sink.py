@@ -15,10 +15,11 @@ the test has stopped, and later data must not un-decide it (that is
 what makes the error rates alpha/beta valid). The latch also makes the
 monitor robust to post-decision drift.
 
-State = one row (cumulative LLR, totals, decision) committed as an
-MVCC version with the epoch id in the manifest — the topk_sink
-pattern: a crash-replayed micro-batch sees its epoch already committed
-and no-ops, so at-least-once delivery folds exactly once.
+State = one row (cumulative LLR, totals, decision) committed by
+``versioned.fold_epoch`` as an MVCC version with the epoch id in the
+manifest: a crash-replayed micro-batch sees its epoch already committed
+and no-ops, so at-least-once delivery folds exactly once. The query
+starts through the streaming package's ``start_foreach_batch``.
 """
 
 from __future__ import annotations
@@ -30,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import versioned
+from . import start_foreach_batch
 
 _STATE_SCHEMA = (
     "cum_llr double, n_total long, k_total long, decision string"
@@ -49,44 +51,28 @@ def fold_batch(
     """Fold one micro-batch of boolean/0-1 ``success_col`` trials into
     the sequential test state. Public so replay semantics and the latch
     are directly testable."""
-    if batch_df.isEmpty():
-        return
-    spark = batch_df.sparkSession
-    cur = versioned.current_version(state_dir)
-    llr_prev, n_prev, k_prev, decision = 0.0, 0, 0, "continue"
-    if cur is not None:
-        extra = versioned.manifest(state_dir).get("extra", {})
-        if epoch_id <= extra.get("epoch_id", -1):
-            return  # crash-replayed micro-batch: already folded
-        row = versioned.read_version(spark, state_dir).collect()[0]
-        llr_prev, n_prev, k_prev = row["cum_llr"], row["n_total"], row["k_total"]
-        decision = row["decision"]
-    agg = batch_df.agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum(F.col(success_col).cast("int")).cast("long").alias("k"),
-    ).collect()[0]
-    n, k = agg["n"], agg["k"]
-    llr = (
-        llr_prev
-        + k * math.log(p1 / p0)
-        + (n - k) * math.log((1 - p1) / (1 - p0))
-    )
-    hi = math.log((1 - beta) / alpha)
-    lo = math.log(beta / (1 - alpha))
-    if decision == "continue":  # a crossed boundary latches forever
-        if llr >= hi:
-            decision = "accept_h1"
-        elif llr <= lo:
-            decision = "accept_h0"
-    state = spark.createDataFrame(
-        [(llr, n_prev + n, k_prev + k, decision)], _STATE_SCHEMA
-    )
-    versioned.write_version(
-        state,
-        state_dir,
-        note=f"epoch {epoch_id}",
-        extra={"epoch_id": epoch_id, "p0": p0, "p1": p1},
-    )
+
+    def step(prev: DataFrame | None, _extra: dict) -> tuple[DataFrame, dict]:
+        llr, n_prev, k_prev, decision = 0.0, 0, 0, "continue"
+        if prev is not None:
+            llr, n_prev, k_prev, decision = prev.collect()[0]
+        agg = batch_df.agg(
+            F.count("*").cast("long").alias("n"),
+            F.sum(F.col(success_col).cast("int")).cast("long").alias("k"),
+        ).collect()[0]
+        n, k = agg["n"], agg["k"]
+        llr = llr + k * math.log(p1 / p0) + (n - k) * math.log((1 - p1) / (1 - p0))
+        if decision == "continue":  # a crossed boundary latches forever
+            if llr >= math.log((1 - beta) / alpha):
+                decision = "accept_h1"
+            elif llr <= math.log(beta / (1 - alpha)):
+                decision = "accept_h0"
+        state = batch_df.sparkSession.createDataFrame(
+            [(llr, n_prev + n, k_prev + k, decision)], _STATE_SCHEMA
+        )
+        return state, {"p0": p0, "p1": p1}
+
+    versioned.fold_epoch(batch_df, epoch_id, state_dir, step)
 
 
 def start_sprt_stream(
@@ -104,16 +90,7 @@ def start_sprt_stream(
     trials. ``trigger`` is a processingTime string; ``None`` ->
     availableNow (drain-and-stop)."""
 
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        fold_batch(
-            batch_df, epoch_id, success_col, state_dir, p0, p1, alpha, beta
-        )
-
-    trig = {"processingTime": trigger} if trigger else {"availableNow": True}
-    return (
-        stream.writeStream.outputMode("update")
-        .foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**trig)
-        .start()
+    return start_foreach_batch(
+        stream, lambda df, eid: fold_batch(df, eid, success_col, state_dir, p0, p1, alpha, beta),
+        checkpoint_dir, trigger, "update",
     )

@@ -21,9 +21,10 @@ present — certified for the batch twin by heavy_hitters_certificate
 and pinned for this sink in tests/test_streaming_topk.py.
 
 Exactly-once: each trigger commits (summary, n_total, epoch_id) as ONE
-MVCC version (operators/versioned.py — the matview_sink pattern);
-a crash-replayed micro-batch sees its epoch_id already committed and
-no-ops, so at-least-once delivery yields exactly-once summary state.
+MVCC version through ``versioned.fold_epoch``; a crash-replayed
+micro-batch sees its epoch_id already committed and no-ops, so
+at-least-once delivery yields exactly-once summary state. The query
+starts through the streaming package's ``start_foreach_batch``.
 """
 
 from __future__ import annotations
@@ -33,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import versioned
+from . import start_foreach_batch
 
 
 def _mg_cap(counts: DataFrame, k: int) -> DataFrame:
@@ -63,35 +65,19 @@ def fold_batch(
     """Fold one micro-batch into the versioned summary. Public so the
     replay-idempotency semantics are directly testable; the streaming
     sink below is exactly this per trigger."""
-    if batch_df.isEmpty():
-        return
-    spark = batch_df.sparkSession
-    cur = versioned.current_version(state_dir)
-    n_prev = 0
-    if cur is not None:
-        extra = versioned.manifest(state_dir).get("extra", {})
-        if epoch_id <= extra.get("epoch_id", -1):
-            return  # crash-replayed micro-batch: already folded
-        n_prev = extra.get("n_total", 0)
-    batch_counts = batch_df.groupBy(
-        F.col(key_col).cast("string").alias("key")
-    ).agg(F.count("*").alias("c"))
-    n_batch = batch_df.count()
-    if cur is not None:
-        merged = (
-            versioned.read_version(spark, state_dir)
-            .unionByName(batch_counts)
-            .groupBy("key")
-            .agg(F.sum("c").alias("c"))
-        )
-    else:
-        merged = batch_counts
-    versioned.write_version(
-        _mg_cap(merged, k),
-        state_dir,
-        note=f"epoch {epoch_id}",
-        extra={"epoch_id": epoch_id, "n_total": n_prev + n_batch, "k": k},
-    )
+
+    def step(prev: DataFrame | None, extra: dict) -> tuple[DataFrame, dict]:
+        merged = batch_df.groupBy(
+            F.col(key_col).cast("string").alias("key")
+        ).agg(F.count("*").alias("c"))
+        if prev is not None:
+            merged = (
+                prev.unionByName(merged).groupBy("key").agg(F.sum("c").alias("c"))
+            )
+        n_total = extra.get("n_total", 0) + batch_df.count()
+        return _mg_cap(merged, k), {"n_total": n_total, "k": k}
+
+    versioned.fold_epoch(batch_df, epoch_id, state_dir, step)
 
 
 def start_heavy_hitters_stream(
@@ -106,14 +92,7 @@ def start_heavy_hitters_stream(
     at ``state_dir`` (an MVCC versioned table; created on first batch).
     ``trigger`` is a processingTime string; ``None`` -> availableNow."""
 
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        fold_batch(batch_df, epoch_id, key_col, k, state_dir)
-
-    trig = {"processingTime": trigger} if trigger else {"availableNow": True}
-    return (
-        stream.writeStream.outputMode("update")
-        .foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**trig)
-        .start()
+    return start_foreach_batch(
+        stream, lambda df, eid: fold_batch(df, eid, key_col, k, state_dir),
+        checkpoint_dir, trigger, "update",
     )

@@ -221,6 +221,25 @@ def test_cli_forecast_reads_the_batch_table(lambda_tables, tmp_path, capsys, mon
     assert got == pytest.approx(_replay("ETH_USDT"), abs=0.006)
 
 
+def test_forecast_short_history_reports_found_need(lambda_tables, tmp_path, capsys, monkeypatch):
+    """A model window longer than the history: the CLI exits 1 and the
+    route 404s, both with the reference's found/need message."""
+    found = HOURS + UPDATE_HOURS
+    wide = type("_Wide", (_Model,), {"n_features_in_": found + 1})
+    monkeypatch.setattr(xgb_ubjson, "load_reference_regressor", lambda _p: (wide(), {}))
+    monkeypatch.setattr(artifacts, "load_minmax_scaler", lambda _p: _scaler("ETH_USDT"))
+    capsys.readouterr()
+    assert main(["forecast", "--symbol", "ETH_USDT", "--artifacts", str(tmp_path),
+                 "--hist", lambda_tables["hist"]]) == 1
+    assert f"found {found}, need {found + 1}" in capsys.readouterr().err
+    for name in ("ETH_USDT_xgboost_model.pkl", "ETH_USDT_scaler.pkl"):
+        (tmp_path / name).write_bytes(b"synthetic")
+    body, code = ServingBackend(hist=lambda_tables["hist"], artifacts_dir=str(tmp_path)).predict(
+        "ETH_USDT_1h")
+    assert code == 404
+    assert f"found {found}, need {found + 1}" in body["error"]
+
+
 def test_pages_list_both_symbol_forms(server):
     code, body = _get(server, "/")
     assert code == 200

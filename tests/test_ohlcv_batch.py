@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from big_data_pr_spark.ohlcv import batch, serving
 from big_data_pr_spark.ohlcv.forecast import DriftModel, forecast_all_symbols, recursive_forecast
+from big_data_pr_spark.ohlcv.schemas import symbol_key, url_symbol
 
 HOUR_MS = 3_600_000
 T0 = 1_700_000_400_000  # aligned epoch ms
@@ -112,14 +113,10 @@ def test_serving_queries(spark, csv_dir, tmp_path):
 
 def test_symbol_encode_decode(spark):
     df = spark.createDataFrame([("BTC/USDT",)], "symbol string")
-    enc = df.select(serving.encode_symbol(F.col("symbol")).alias("s")).collect()[0][0]
+    enc = df.select(url_symbol(F.col("symbol")).alias("s")).collect()[0][0]
     assert enc == "BTC-USDT"
-    dec = (
-        spark.createDataFrame([(enc,)], "s string")
-        .select(serving.decode_symbol(F.col("s")).alias("s"))
-        .collect()[0][0]
-    )
-    assert dec == "BTC/USDT"
+    assert symbol_key(enc, "latest") == "BTC/USDT"
+    assert symbol_key(enc, "hist") == "BTC_USDT"
 
 
 def test_recursive_forecast_loop():

@@ -338,6 +338,34 @@ def test_retention_drops_old_partitions(spark, tmp_path):
     assert not any(e.startswith("event_date=") for e in os.listdir(chart_path))
 
 
+def test_chart_route_answers_after_retention(spark, tmp_path):
+    """Retention deletes partitions the chart file sink's log still
+    lists; the chart route must keep answering from what is left."""
+    import urllib.request
+
+    from big_data_pr_spark.ohlcv.serving_http import ServingBackend, start_server
+
+    input_dir = tmp_path / "in"
+    input_dir.mkdir()
+    day2 = 120  # minutes after T0: 2023-11-15 00:20 UTC
+    _write_batch(input_dir, "b1.json", [_msg("BTC/USDT", m, 100.0 + m) for m in range(5)]
+                 + [_msg("BTC/USDT", day2 + m, 200.0 + m) for m in range(5)])
+    _run_available(spark, input_dir, tmp_path / "out", tmp_path / "cp")
+    chart_path = str(tmp_path / "out" / "chart")
+    assert pipeline.apply_retention(chart_path, keep_dates=["2023-11-15"]) == [
+        "event_date=2023-11-14"
+    ]
+    now = F.expr(f"timestamp_millis({T0_MS + (day2 + 4) * 60_000})")
+    srv, port = start_server(ServingBackend(chart=chart_path, now_fn=lambda: now))
+    try:
+        with urllib.request.urlopen(f"http://127.0.0.1:{port}/api/chart_data_1m/BTC-USDT") as r:
+            assert r.status == 200
+            body = json.loads(r.read())
+    finally:
+        srv.shutdown()
+    assert body == [[T0_MS + (day2 + m) * 60_000, 200.0 + m] for m in range(5)]
+
+
 def test_streaming_ema_stateful(spark, tmp_path):
     """Stateful streaming recursive EMA: matches the batch recurrence
     exactly, skips replays, and continues the recursion across a

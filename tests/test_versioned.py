@@ -99,6 +99,37 @@ def test_snapshot_diff_between_versions(spark, tdir):
     assert diff == {(1, "changed"), (2, "removed"), (3, "added")}
 
 
+def test_fold_epoch_fences_epochs(spark, tdir):
+    """The exactly-once fold of the streaming sinks: ``step`` sees the
+    committed state and extra, and only a new epoch of a non-empty
+    batch commits."""
+    seen = []
+
+    def step(prev, extra):
+        seen.append((None if prev is None else sorted(r["k"] for r in prev.collect()), extra))
+        state = batch if prev is None else prev.unionByName(batch)
+        return state, {"n": extra.get("n", 0) + 1}
+
+    batch = _df(spark, [(1, "a")])
+    assert versioned.fold_epoch(batch.limit(0), 0, tdir, step) is None
+    assert versioned.current_version(tdir) is None and seen == []
+
+    assert versioned.fold_epoch(batch, 3, tdir, step) == 1
+    assert seen == [(None, {})]
+    assert versioned.manifest(tdir)["extra"] == {"epoch_id": 3, "n": 1}
+    assert versioned.manifest(tdir)["note"] == "epoch 3"
+
+    for replayed in (3, 2):  # a replayed and an older epoch
+        assert versioned.fold_epoch(batch, replayed, tdir, step) is None
+    assert versioned.current_version(tdir) == 1 and len(seen) == 1
+
+    batch = _df(spark, [(2, "b")])
+    assert versioned.fold_epoch(batch, 4, tdir, step) == 2
+    assert seen[1] == ([1], {"epoch_id": 3, "n": 1})
+    assert versioned.manifest(tdir)["extra"] == {"epoch_id": 4, "n": 2}
+    assert sorted(r["k"] for r in versioned.read_version(spark, tdir).collect()) == [1, 2]
+
+
 def test_empty_table_raises(spark, tdir):
     with pytest.raises(FileNotFoundError):
         versioned.read_version(spark, tdir)
