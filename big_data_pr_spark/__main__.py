@@ -48,8 +48,9 @@ def cmd_stream(args: argparse.Namespace) -> int:
         raw = P.kafka_source(spark, args.brokers, args.topic)
     else:
         raw = P.file_source(spark, args.path)
-    triggers = (
-        {"latest": args.trigger_latest, "stats": args.trigger_stats, "chart": args.trigger_chart}
+    triggers = (  # the reference's cadences, stream_processor.py:111,146,175
+        {"latest": args.trigger_latest, "stats": args.trigger_stats or "1 minute",
+         "chart": args.trigger_chart or "15 seconds"}
         if args.trigger_latest
         else None  # None → availableNow (drain-and-stop test mode)
     )
@@ -368,8 +369,8 @@ def main(argv: list[str] | None = None) -> int:
     s.add_argument("--out", required=True, help="output tables directory")
     s.add_argument("--checkpoint", required=True, help="checkpoint root (one subdir per query)")
     s.add_argument("--trigger-latest", default=None, help="e.g. '15 seconds'; absent -> availableNow")
-    s.add_argument("--trigger-stats", default="1 minute")
-    s.add_argument("--trigger-chart", default="15 seconds")
+    s.add_argument("--trigger-stats", default=None, help="needs --trigger-latest; default '1 minute'")
+    s.add_argument("--trigger-chart", default=None, help="needs --trigger-latest; default '15 seconds'")
     s.add_argument(
         "--bootstrap-watermark", default=None, metavar="TS",
         help="event-time cutoff in UTC ('YYYY-MM-DD HH:MM:SS'; the "
@@ -526,6 +527,8 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
     if args.cmd == "stream" and args.source == "file" and not args.path:
         ap.error("--path is required with --source file")
+    if args.cmd == "stream" and not args.trigger_latest and (args.trigger_stats or args.trigger_chart):
+        ap.error("--trigger-stats and --trigger-chart need --trigger-latest")
     if args.cmd == "model" and not (args.train or args.score):
         ap.error("pass --train gbt|logreg or --score")
     return args.fn(args)

@@ -30,16 +30,17 @@ from pyspark.sql import functions as F
 
 from ..fsutil import require_local
 from ..operators import versioned
-from .schemas import FILENAME_PATTERN, OHLCV_CSV_SCHEMA
+from .schemas import CONTRACTS, FILENAME_PATTERN, columns
 
 
 def read_candle_csvs(spark: SparkSession, paths: Sequence[str]) -> DataFrame:
-    """S1: multi-path CSV scan with explicit schema + filename lineage.
+    """S1: multi-path CSV scan with the declared ``csv`` contract +
+    filename lineage.
 
     Reference ``batch_processor.py:12-15,53-54`` reads two HDFS globs
     (historical + hourly updates) — an implicit UNION ALL (SURVEY §2.7).
     """
-    df = spark.read.schema(OHLCV_CSV_SCHEMA).option("header", "true").csv(list(paths))
+    df = spark.read.schema(CONTRACTS["csv"]).option("header", "true").csv(list(paths))
     basename = F.regexp_extract(F.input_file_name(), r"([^/]+)$", 1)
     return df.withColumn("source_file", basename)
 
@@ -100,25 +101,9 @@ def with_doc_id(df: DataFrame) -> DataFrame:
     )
 
 
-SERVING_COLUMNS = [
-    "doc_id",
-    "symbol",
-    "timeframe",
-    "timestamp_s",
-    "timestamp_dt",
-    "open",
-    "high",
-    "low",
-    "close",
-    "volume",
-    "sma_7",
-    "sma_30",
-]
-
-
 def build_serving_df(spark: SparkSession, input_paths: Sequence[str]) -> DataFrame | None:
-    """Full batch transformation; returns None on empty input (the
-    reference's early-exit, ``batch_processor.py:56-59``)."""
+    """Full batch transformation into the ``hist`` contract; returns None
+    on empty input (the reference's early-exit, ``batch_processor.py:56-59``)."""
     from pyspark.errors import AnalysisException
 
     try:
@@ -131,7 +116,7 @@ def build_serving_df(spark: SparkSession, input_paths: Sequence[str]) -> DataFra
     valid, _rejects = split_valid(keyed)
     timed = with_event_time(valid)
     feats = with_sma_features(timed)
-    return with_doc_id(feats).select(*SERVING_COLUMNS)
+    return with_doc_id(feats).select(*columns("hist"))
 
 
 def upsert_parquet(

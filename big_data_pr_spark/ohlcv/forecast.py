@@ -83,30 +83,21 @@ def recursive_forecast(
     would fail sklearn's feature-count validation), the recursion runs
     in SCALED space (scaled predictions are appended to the window),
     and only emitted predictions are inverse-transformed back to price.
+    Without a scaler both transforms are the identity.
     """
     model = model or DriftModel()
     k = len(closes)
     _validate(model, scaler, k)
-    out: list[tuple[int, float]] = []
     if scaler is None:
-        window = np.asarray(closes, dtype=np.float64)
-        for i in range(1, steps + 1):
-            pred = float(np.asarray(model.predict(window.reshape(1, -1))).reshape(-1)[0])
-            out.append((last_ts_ms + i * step_ms, pred))
-            window = np.append(window[1:], pred)
-        return out
-    window = scaler.transform(
-        np.asarray(closes, dtype=np.float64).reshape(-1, 1)
-    ).flatten()
+        to_model = to_price = np.asarray  # identity
+    else:
+        to_model, to_price = scaler.transform, scaler.inverse_transform
+    window = to_model(np.asarray(closes, dtype=np.float64).reshape(-1, 1)).flatten()
+    out: list[tuple[int, float]] = []
     for i in range(1, steps + 1):
-        pred_scaled = float(
-            np.asarray(model.predict(window.reshape(1, -1))).reshape(-1)[0]
-        )
-        pred = float(
-            scaler.inverse_transform(np.asarray([[pred_scaled]]))[0, 0]
-        )
-        out.append((last_ts_ms + i * step_ms, pred))
-        window = np.append(window[1:], pred_scaled)
+        pred = float(np.asarray(model.predict(window.reshape(1, -1))).reshape(-1)[0])
+        out.append((last_ts_ms + i * step_ms, float(to_price(np.asarray([[pred]]))[0, 0])))
+        window = np.append(window[1:], pred)
     return out
 
 

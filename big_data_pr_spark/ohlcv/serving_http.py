@@ -63,9 +63,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import versioned
-from ..operators.windows import top1_per_key
 from . import forecast, serving
-from .schemas import CHART_SCHEMA, CHART_TS, symbol_key
+from .schemas import CHART_TS, CONTRACTS, symbol_key
 
 PREDICTION_STEPS_XGBOOST = 24  # app.py:23
 
@@ -106,9 +105,10 @@ def _table_version(path: str | None) -> tuple[int, str] | None:
 class ServingBackend:
     """The five endpoint computations over the serving tables, given by
     path (versioned ``hist``/``latest``/``stats``, the ``chart`` file
-    sink). Each request reads the table's version and re-plans the
-    table only when it changed. A table not configured or not yet
-    committed is absent: the realtime/chart endpoints then answer with
+    sink) and read with their declared contracts (``schemas.CONTRACTS``).
+    Each request reads the table's version and re-plans the table only
+    when it changed. A table not configured or not yet committed is
+    absent: the realtime/chart endpoints then answer with
     their empty shapes, but ``historical_data`` 404s (its upstream route
     404s on a missing ES index — app.py:190). ``now_fn`` yields the
     chart window's "now" Column — ``F.current_timestamp()`` in
@@ -139,11 +139,11 @@ class ServingBackend:
                 return None
             cached = self.plans.get(table)
             if cached is None or cached[0] != got[0]:
-                reader = SparkSession.builder.getOrCreate().read
+                # declared, so a re-plan infers nothing from the files
+                reader = SparkSession.builder.getOrCreate().read.schema(CONTRACTS[table])
                 if table == "chart":
-                    # declared: readable before the first epoch; retention
-                    # drops partitions whose files the sink's log still lists
-                    reader = reader.schema(CHART_SCHEMA).option("ignoreMissingFiles", "true")
+                    # retention drops partitions whose files the sink's log still lists
+                    reader = reader.option("ignoreMissingFiles", "true")
                 cached = self.plans[table] = (got[0], reader.parquet(got[1]))
             return cached
 
@@ -178,8 +178,9 @@ class ServingBackend:
     def realtime_stats(self, encoded_symbol: str) -> dict:
         sym = symbol_key(encoded_symbol, "latest")
         latest = self._query("latest", lambda df: df.filter(F.col("symbol") == sym).limit(1))
-        stats = self._query("stats", lambda df: top1_per_key(
-            df.filter(F.col("symbol") == sym), ["symbol"], [F.desc("window_end")]))
+        # the reference's sort + size 1 (app.py:102-104)
+        stats = self._query("stats", lambda df: df.filter(F.col("symbol") == sym)
+                            .orderBy(F.desc("window_end")).limit(1))
         return {
             "latest": _row_dict(latest[0]) if latest else {},
             "stats": _row_dict(stats[0]) if stats else {},

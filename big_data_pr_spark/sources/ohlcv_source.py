@@ -38,11 +38,7 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
-SCHEMA = (
-    "timestamp long, symbol string, timeframe string, open double, "
-    "high double, low double, close double, volume double, "
-    "datetime_str string"
-)
+from ..ohlcv.schemas import CONTRACTS
 
 # Deterministic synthetic-exchange parameters (all SQL-replayable).
 DEFAULT_SYMBOLS = "BTC_USDT,ETH_USDT,SOL_USDT"
@@ -151,7 +147,7 @@ class OhlcvRestDataSource(DataSource):
         return "ohlcv_rest"
 
     def schema(self) -> str:
-        return SCHEMA
+        return CONTRACTS["message"]
 
     def reader(self, schema):
         return OhlcvRestReader(self.options)

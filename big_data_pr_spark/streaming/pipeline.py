@@ -41,7 +41,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..ohlcv.schemas import CHART_FIELDS, CHART_TS, OHLCV_STREAM_SCHEMA, url_symbol
+from ..ohlcv.schemas import CHART_TS, CONTRACTS, columns, names, url_symbol
 from ..operators import versioned
 from . import start_foreach_batch, trigger_kwargs
 
@@ -69,13 +69,7 @@ def kafka_source(
 def file_source(spark: SparkSession, path: str) -> DataFrame:
     """Test-harness source: JSON files with the same ``value`` payload
     contract as the Kafka topic (one JSON message per line)."""
-    return (
-        spark.readStream.schema("value STRING")
-        .format("text")
-        .load(path)
-        .withColumnRenamed("value", "value_str")
-        .selectExpr("CAST(value_str AS STRING) AS value")
-    )
+    return spark.readStream.text(path)
 
 
 def to_kafka_messages(candles: DataFrame) -> DataFrame:
@@ -85,22 +79,14 @@ def to_kafka_messages(candles: DataFrame) -> DataFrame:
     payload `parse_stream` expects. Feed to ``df.write.format("kafka")
     .option("kafka.bootstrap.servers", ...).option("topic", ...)`` in
     production, or to a file sink in tests (round-trip asserted in
-    tests/test_streaming.py)."""
-    payload = F.to_json(
-        F.struct(
-            F.col("timestamp_ms").alias("timestamp"),
-            "symbol",
-            "timeframe",
-            "open",
-            "high",
-            "low",
-            "close",
-            "volume",
-            F.date_format(
-                F.timestamp_millis(F.col("timestamp_ms")), "yyyy-MM-dd'T'HH:mm:ss'Z'"
-            ).alias("datetime_str"),
-        )
-    )
+    tests/test_streaming.py); the payload's fields are the ``message``
+    contract."""
+    payload = F.to_json(F.struct(*columns("message", {
+        "timestamp": F.col("timestamp_ms"),
+        "datetime_str": F.date_format(
+            F.timestamp_millis(F.col("timestamp_ms")), "yyyy-MM-dd'T'HH:mm:ss'Z'"
+        ),
+    })))
     return candles.select(
         F.col("symbol").cast("string").alias("key"), payload.alias("value")
     )
@@ -143,7 +129,7 @@ class EpochCounts:
 
 def _message() -> Column:
     """The Kafka ``value`` payload parsed as struct ``d``."""
-    return F.from_json(F.col("value").cast("string"), OHLCV_STREAM_SCHEMA).alias("d")
+    return F.from_json(F.col("value").cast("string"), CONTRACTS["message"]).alias("d")
 
 
 def _candle_columns() -> list[Column]:
@@ -163,21 +149,17 @@ def parse_stream(raw: DataFrame) -> DataFrame:
 
 
 def latest_snapshot(parsed: DataFrame) -> DataFrame:
-    """Q1 aggregation (A1): one row per symbol with the newest candle.
+    """Q1 aggregation (A1): one row per symbol with the newest candle,
+    as the ``latest`` contract.
 
     ``max_by(x, (event_timestamp, timestamp_ms))`` replaces the
     reference's nondeterministic ``F.last`` — the result is defined
     regardless of partition arrival order."""
     key = F.struct("event_timestamp", "timestamp_ms")
-    return parsed.groupBy("symbol").agg(
-        F.max("event_timestamp").alias("last_event_timestamp"),
-        F.max_by("close", key).alias("current_price"),
-        F.max_by("open", key).alias("open"),
-        F.max_by("high", key).alias("high"),
-        F.max_by("low", key).alias("low"),
-        F.max_by("volume", key).alias("volume"),
-        F.max_by("timestamp_ms", key).alias("timestamp_ms"),
-    )
+    derived = {"last_event_timestamp": F.max("event_timestamp"), "current_price": F.max_by("close", key)}
+    return parsed.groupBy("symbol").agg(*[
+        derived.get(c, F.max_by(c, key)).alias(c) for c in names("latest") if c != "symbol"
+    ])
 
 
 def window_stats(
@@ -187,7 +169,8 @@ def window_stats(
     watermark: str = WATERMARK,
 ) -> DataFrame:
     """Q2 aggregation (A2 + T1/T2): sliding-window avg/min/max/count per
-    symbol, state bounded by the event-time watermark."""
+    symbol, state bounded by the event-time watermark; the ``stats``
+    contract."""
     return (
         parsed.withWatermark("event_timestamp", watermark)
         .groupBy("symbol", F.window("event_timestamp", duration, slide).alias("w"))
@@ -197,29 +180,24 @@ def window_stats(
             F.max("close").alias("max_close"),
             F.count("close").alias("n_candles"),
         )
-        .select(
-            "symbol",
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "avg_close",
-            "min_close",
-            "max_close",
-            "n_candles",
+        .select(*columns("stats", {
+            "window_start": F.col("w.start"),
+            "window_end": F.col("w.end"),
             # F2: stable doc key `{sym}_stats_{epoch(window_end)}`
-            F.concat(
+            "doc_id": F.concat(
                 url_symbol(F.col("symbol")),
                 F.lit("_stats_"),
                 F.unix_seconds(F.col("w.end")).cast("string"),
-            ).alias("doc_id"),
-        )
+            ),
+        }))
     )
 
 
 def raw_chart(parsed: DataFrame) -> DataFrame:
     """Q3 projection: pre-watermark pass-through for charting, keyed
     ``{sym}_1m_{ts_ms}`` (``stream_processor.py:149-169``), partitioned
-    by event date; columns as ``schemas.CHART_FIELDS``."""
-    derived = {
+    by event date; the ``chart`` contract."""
+    return parsed.select(*columns("chart", {
         CHART_TS: F.col("event_timestamp"),
         "doc_id": F.concat(
             url_symbol(F.col("symbol")),
@@ -227,8 +205,7 @@ def raw_chart(parsed: DataFrame) -> DataFrame:
             F.col("timestamp_ms").cast("string"),
         ),
         "event_date": F.to_date(F.col("event_timestamp")),
-    }
-    return parsed.select(*[derived.get(c, F.col(c)).alias(c) for c in CHART_FIELDS])
+    }))
 
 
 def dedup_stream(parsed: DataFrame, watermark: str = WATERMARK) -> DataFrame:

@@ -57,6 +57,41 @@ def test_stream_file_source_requires_path():
         main(["stream", "--source", "file", "--out", "/tmp/x", "--checkpoint", "/tmp/y"])
 
 
+@pytest.mark.parametrize("flag", ["--trigger-stats", "--trigger-chart"])
+def test_stream_trigger_flag_needs_trigger_latest(tmp_path, capsys, flag):
+    """Without --trigger-latest the stream drains in availableNow mode,
+    where a stats or chart cadence would be silently ignored."""
+    src = tmp_path / "src"
+    src.mkdir()
+    with pytest.raises(SystemExit) as exc:
+        main(["stream", "--path", str(src), "--out", str(tmp_path / "out"),
+              "--checkpoint", str(tmp_path / "ck"), flag, "5 seconds"])
+    assert exc.value.code == 2
+    assert "need --trigger-latest" in capsys.readouterr().err
+
+
+def test_stream_trigger_defaults_with_trigger_latest(spark, tmp_path, monkeypatch):
+    """With --trigger-latest, an unset stats/chart trigger takes the
+    reference's cadence (stream_processor.py:146,175)."""
+    from big_data_pr_spark.streaming import pipeline
+
+    class Started(Exception):
+        pass
+
+    seen = {}
+
+    def start(raw, out, checkpoint, triggers=None, bootstrap_watermark=None):
+        seen.update(triggers)
+        raise Started
+
+    monkeypatch.setattr(pipeline, "start_three_queries", start)
+    with pytest.raises(Started):
+        main(["stream", "--path", str(tmp_path), "--out", str(tmp_path / "out"),
+              "--checkpoint", str(tmp_path / "ck"), "--trigger-latest", "15 seconds",
+              "--trigger-chart", "5 seconds"])
+    assert seen == {"latest": "15 seconds", "stats": "1 minute", "chart": "5 seconds"}
+
+
 def test_sql_subcommand(spark, sf_dir, capsys):
     assert main(
         ["sql", "SELECT count(*) AS n FROM orders", "--sf-dir", sf_dir, "--limit", "1"]

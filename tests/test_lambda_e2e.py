@@ -22,6 +22,7 @@ import pytest
 from big_data_pr_spark.__main__ import main
 from big_data_pr_spark.ohlcv import artifacts, xgb_ubjson
 from big_data_pr_spark.ohlcv.artifacts import MinMaxScalerParams
+from big_data_pr_spark.ohlcv.schemas import CONTRACTS
 from big_data_pr_spark.ohlcv.serving_http import ServingBackend, start_server
 from big_data_pr_spark.operators import versioned
 
@@ -264,3 +265,17 @@ def test_plain_hive_read_of_table_root_is_current_version(spark, lambda_tables, 
     key = "symbol" if table == "latest" else "doc_id"
     assert sorted(got.column(key).to_pylist()) == sorted(r[key] for r in want.select(key).collect())
     assert got.num_rows == {"hist": 2 * (HOURS + UPDATE_HOURS), "latest": 2}.get(table, got.num_rows)
+
+
+@pytest.mark.parametrize("table", ["hist", "latest", "stats", "chart"])
+def test_written_tables_have_exactly_their_contract(spark, lambda_tables, table):
+    """Serve reads every table by its declared contract, so a writer
+    that drifted from it would read back as nulls: each table the CLI
+    wrote, read with Spark's inference instead, has exactly the
+    contract's column names and types."""
+    path = lambda_tables[table]
+    ver = versioned.current_version(path)
+    written = spark.read.parquet(path if ver is None else versioned.version_dir(path, ver))
+    declared = spark.createDataFrame([], CONTRACTS[table])
+    assert {f.name: f.dataType for f in written.schema} == {
+        f.name: f.dataType for f in declared.schema}

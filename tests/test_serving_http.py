@@ -2,9 +2,10 @@
 parity with reference app.py:86-244 — payload shapes, symbol decoding,
 the Chart.js dataset contract, and the full error contract (400/404
 with the reference's message shapes). The server runs in-process on an
-ephemeral port against tiny versioned tables in the layers' stored
-forms (underscore symbols in hist, slash symbols and ``@timestamp`` in
-the stream tables); the predict endpoint exercises the REAL reference
+ephemeral port against tiny versioned tables built from the declared
+contracts (``schemas.CONTRACTS``) in the layers' stored forms
+(underscore symbols in hist, slash symbols and ``@timestamp`` in the
+stream tables); the predict endpoint exercises the REAL reference
 artifacts when present."""
 
 from __future__ import annotations
@@ -13,9 +14,11 @@ import json
 import os
 import urllib.error
 import urllib.request
+from datetime import datetime, timezone
 
 import pytest
 
+from big_data_pr_spark.ohlcv.schemas import CONTRACTS
 from big_data_pr_spark.ohlcv.serving_http import ServingBackend, start_server
 from big_data_pr_spark.operators import versioned
 
@@ -30,9 +33,26 @@ def _get(port: int, path: str):
         return e.code, e.read().decode(), e.headers.get("Content-Type")
 
 
-def _table(df, path, partition_by=()):
+def _ts(ms: int) -> datetime:
+    return datetime.fromtimestamp(ms / 1000, timezone.utc)
+
+
+def _table(spark, table: str, rows: list[tuple], path, partition_by=()):
+    """A versioned ``table`` of ``rows``, every column of its contract."""
+    df = spark.createDataFrame(rows, CONTRACTS[table])
     versioned.write_version(df, str(path), partition_by=partition_by)
     return str(path)
+
+
+def _hist_row(sym: str, hour: int, close: float, sma_7: float, sma_30: float) -> tuple:
+    ms = BASE_MS + hour * 3600000
+    return (f"{sym}_1h_hist_{ms // 1000}", sym, "1h", ms // 1000, _ts(ms),
+            close, close + 5, close - 5, close, 1.0, sma_7, sma_30)
+
+
+def _latest_row(sym: str, price: float) -> tuple:
+    ms = BASE_MS + 39 * 60000
+    return (sym, _ts(ms), price, price - 50, price + 50, price - 100, 3.0, ms)
 
 
 @pytest.fixture(scope="module")
@@ -42,43 +62,24 @@ def server(spark, tmp_path_factory):
     tdir = tmp_path_factory.mktemp("serving")
     closes = [80000.0, 80900.0, 80400.0, 81300.0, 80700.0, 81100.0,
               80500.0, 81250.0]
-    hist = spark.createDataFrame(
-        [("BTC_USDT", "1h", i, c, c - 10, c - 20) for i, c in enumerate(closes)]
-        + [("ETH_USDT", "1h", i, 2000.0 + i, 1990.0 + i, 1980.0 + i)
-           for i in range(3)],
-        "symbol string, timeframe string, hour int, close double, "
-        "sma_7 double, sma_30 double",
-    ).selectExpr(
-        "symbol", "timeframe",
-        f"timestamp_millis({BASE_MS} + hour * 3600000) AS timestamp_dt",
-        "close", "sma_7", "sma_30",
-    )
-    latest = spark.createDataFrame(
-        [("BTC/USDT", 81250.0), ("ETH/USDT", 2002.0)],
-        "symbol string, close double",
-    )
-    stats = spark.createDataFrame(
-        [("BTC/USDT", 1, 80950.0), ("BTC/USDT", 2, 81000.0)],
-        "symbol string, wend int, avg_close double",
-    ).selectExpr(
-        "symbol",
-        f"timestamp_millis({BASE_MS} + wend * 60000) AS window_end",
-        "avg_close",
-    )
-    chart = spark.createDataFrame(
-        [("BTC/USDT", m, 81000.0 + m) for m in range(40)],
-        "symbol string, minute int, close double",
-    ).selectExpr(
-        "symbol",
-        f"timestamp_millis({BASE_MS} + minute * 60000) AS `@timestamp`",
-        "close",
-    )
+    hist = [_hist_row("BTC_USDT", i, c, c - 10, c - 20) for i, c in enumerate(closes)] + [
+        _hist_row("ETH_USDT", i, 2000.0 + i, 1990.0 + i, 1980.0 + i) for i in range(3)]
+    latest = [_latest_row("BTC/USDT", 81250.0), _latest_row("ETH/USDT", 2002.0)]
+    stats = [
+        ("BTC/USDT", _ts(BASE_MS + (wend - 10) * 60000), _ts(BASE_MS + wend * 60000),
+         avg, avg - 100, avg + 100, 10, f"BTC-USDT_stats_{(BASE_MS + wend * 60000) // 1000}")
+        for wend, avg in ((1, 80950.0), (2, 81000.0))
+    ]
+    chart = [
+        (_ts(ms), "BTC/USDT", 81000.0 + m, 1.0, ms, f"BTC-USDT_1m_{ms}", _ts(ms).date())
+        for m, ms in ((m, BASE_MS + m * 60000) for m in range(40))
+    ]
     now_col = F.expr(f"timestamp_millis({BASE_MS} + 39 * 60000)")
     backend = ServingBackend(
-        hist=_table(hist, tdir / "hist", ("symbol", "timeframe")),
-        latest=_table(latest, tdir / "latest"),
-        stats=_table(stats, tdir / "stats"),
-        chart=_table(chart, tdir / "chart"),
+        hist=_table(spark, "hist", hist, tdir / "hist", ("symbol", "timeframe")),
+        latest=_table(spark, "latest", latest, tdir / "latest"),
+        stats=_table(spark, "stats", stats, tdir / "stats"),
+        chart=_table(spark, "chart", chart, tdir / "chart", ("event_date",)),
         artifacts_dir="/root/reference/trained_models",
         now_fn=lambda: now_col,
     )
@@ -101,7 +102,7 @@ def test_realtime_stats_decodes_symbol_and_picks_latest_window(server):
     code, body, _ = _get(server, "/api/realtime_stats/BTC-USDT")
     assert code == 200
     d = json.loads(body)
-    assert d["latest"]["close"] == 81250.0
+    assert d["latest"]["current_price"] == 81250.0
     # top-1 by window_end desc (the reference's sort+size=1)
     assert d["stats"]["avg_close"] == 81000.0
 
@@ -222,7 +223,7 @@ def test_percent_encoded_symbol_decoded(server):
     # BTC%2DUSDT must hit the same lookup as BTC-USDT
     code, body, _ = _get(server, "/api/realtime_stats/BTC%2DUSDT")
     assert code == 200
-    assert json.loads(body)["latest"]["close"] == 81250.0
+    assert json.loads(body)["latest"]["current_price"] == 81250.0
     code, body, _ = _get(server, "/api/chart_data_1m/BTC%2DUSDT")
     assert code == 200 and len(json.loads(body)) == 36
     code, body, _ = _get(server, "/api/historical_data/BTC%5FUSDT_1h?range=all")
@@ -260,10 +261,8 @@ def test_predict_configured_symbol_missing_model_404(spark, tmp_path):
 def test_pages_escape_markup_in_symbols(spark, tmp_path):
     # the reference renders via auto-escaping Jinja templates; a symbol
     # containing markup must not be reflected verbatim (r9 advice)
-    evil = spark.createDataFrame(
-        [('<script>alert(1)</script>', 1.0)], "symbol string, close double"
-    )
-    backend = ServingBackend(latest=_table(evil, tmp_path / "latest"))
+    evil = [_latest_row("<script>alert(1)</script>", 1.0)]
+    backend = ServingBackend(latest=_table(spark, "latest", evil, tmp_path / "latest"))
     srv, port = start_server(backend)
     try:
         code, body, _ = _get(port, "/")

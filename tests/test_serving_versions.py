@@ -6,9 +6,11 @@ from __future__ import annotations
 
 import json
 import time
+from datetime import datetime
 
 from pyspark.sql import functions as F
 
+from big_data_pr_spark.ohlcv.schemas import CONTRACTS
 from big_data_pr_spark.ohlcv.serving_http import ServingBackend
 from big_data_pr_spark.operators import versioned
 from big_data_pr_spark.streaming import pipeline
@@ -88,8 +90,9 @@ def test_request_retries_when_its_version_is_vacuumed(spark, tmp_path):
     reads the pointer again and answers from the new version."""
     path = str(tmp_path / "latest")
 
-    def snapshot(close: float):
-        return spark.createDataFrame([("BTC/USDT", close)], "symbol string, close double")
+    def snapshot(price: float):
+        row = ("BTC/USDT", datetime(2024, 1, 1), price, price, price, price, 1.0, 1704067200000)
+        return spark.createDataFrame([row], CONTRACTS["latest"])
 
     versioned.write_version(snapshot(1.0), path)
     backend = ServingBackend(latest=path)
@@ -103,5 +106,8 @@ def test_request_retries_when_its_version_is_vacuumed(spark, tmp_path):
         return got
 
     backend._plan = plan_then_commit
-    assert backend.realtime_stats("BTC-USDT")["latest"] == {"symbol": "BTC/USDT", "close": 2.0}
+    assert backend.realtime_stats("BTC-USDT")["latest"] == {
+        "symbol": "BTC/USDT", "last_event_timestamp": "2024-01-01 00:00:00", "current_price": 2.0,
+        "open": 2.0, "high": 2.0, "low": 2.0, "volume": 1.0, "timestamp_ms": 1704067200000,
+    }
     assert backend.plans["latest"][0] == 2

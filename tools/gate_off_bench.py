@@ -17,6 +17,7 @@ Usage: python tools/gate_off_bench.py [sf_dir] [--reps N]
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -38,11 +39,12 @@ GATES: dict[str, list[str]] = {
 
 
 def main() -> int:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    reps = 2
-    for i, a in enumerate(sys.argv):
-        if a == "--reps":
-            reps = int(sys.argv[i + 1])
+    ap = argparse.ArgumentParser(description="gate-on vs gate-off timings of the gated queries")
+    ap.add_argument("sf_dir", nargs="?", help="fixture directory (default: sf0.01)")
+    ap.add_argument("--reps", type=int, default=2, help="runs per mode; the minimum is reported")
+    ns = ap.parse_args()
+    reps = ns.reps
+    args = [ns.sf_dir] if ns.sf_dir else []
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
 
     from big_data_pr_spark.queries import REGISTRY
