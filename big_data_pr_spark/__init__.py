@@ -8,7 +8,8 @@ system (``ducnghia0509/Big_Data_Pr``), built Spark-first:
                    (:mod:`big_data_pr_spark.ohlcv.batch`)
 - speed layer   -> Structured Streaming three-query topology
                    (:mod:`big_data_pr_spark.streaming.pipeline`)
-- serving layer -> Spark SQL views/queries
+- serving layer -> in-memory Arrow snapshots, one per committed table
+                   version; no Spark job per request
                    (:mod:`big_data_pr_spark.ohlcv.serving`)
 
 plus first-class large-scale training-data-pipeline operators

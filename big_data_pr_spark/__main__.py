@@ -129,23 +129,26 @@ def cmd_forecast(args: argparse.Namespace) -> int:
     """Reference /api/predict_xgboost parity (app.py:195-244), served
     from the REAL pickled artifacts without xgboost/sklearn: the
     restricted unpickler + UBJSON booster decoder recover the fitted
-    state, the last-k closes come from the hist table (or a synthetic
-    ramp when none is given), and the 24-step scaled-space recursion
-    emits [(ts_ms, price)] as JSON lines."""
+    state, the last-k closes come from the hist table through the
+    predict route's own query (no SparkSession), or a synthetic ramp
+    when none is given, and the 24-step scaled-space recursion emits
+    [(ts_ms, price)] as JSON lines."""
     from .ohlcv import forecast
 
     model, scaler = forecast.load_symbol_artifacts(args.artifacts, args.symbol)
     if args.hist:
-        from .operators import versioned
-        from .session import get_spark
+        from .ohlcv.serving_http import ServingBackend
 
-        hist = versioned.read_version(get_spark("forecast-cli"), args.hist)
+        backend = ServingBackend(hist=args.hist)
         try:
             preds = forecast.forecast_from_hist(
-                lambda build: build(hist).collect(), model, scaler, args.symbol, args.steps
+                lambda build: backend.query("hist", build), model, scaler, args.symbol, args.steps
             )
         except forecast.InsufficientHistory as exc:
             print(json.dumps({"error": str(exc)}), file=sys.stderr)
+            return 1
+        if preds is None:
+            print(json.dumps({"error": f"no committed version at {args.hist}"}), file=sys.stderr)
             return 1
     else:
         k = model.n_features_in_
@@ -162,13 +165,12 @@ def cmd_forecast(args: argparse.Namespace) -> int:
 
 def cmd_serve(args: argparse.Namespace) -> int:
     """Reference app.py serving facade over parquet tables (stdlib
-    http.server; see ohlcv/serving_http.py for the route contract)."""
+    http.server; see ohlcv/serving_http.py for the route contract).
+    Starts no SparkSession: the routes answer from Arrow snapshots."""
     from http.server import ThreadingHTTPServer
 
     from .ohlcv.serving_http import ServingBackend, make_handler
-    from .session import get_spark
 
-    get_spark("serving-http")
     backend = ServingBackend(
         hist=args.hist,
         latest=args.latest,

@@ -4,11 +4,12 @@ The reference loads a per-symbol XGBoost regressor + MinMaxScaler
 (joblib), takes the last *k* closes, and iterates 24 times:
 scale → predict → append → slide window (``app.py:229-238``).
 
-Here the recursion is faithfully reproduced as a driver-side loop over a
-collected top-k window (k ≤ 24 rows — collecting it is correct even at
-100 TB: the *scan* that produces the top-k is distributed, see
-``serving.model_input_topk``; only the k-row window crosses to the
-driver). The model is pluggable:
+Here the recursion is faithfully reproduced as an in-process loop over
+the top-k window (k ≤ 24 rows). The ``forecast`` CLI and the predict
+route share it (:func:`forecast_from_hist`) and take the window from
+``serving.model_input_topk``, which opens only the symbol's partition
+of the pinned ``hist`` version, so neither starts Spark and the cost
+does not grow with the other symbols' history. The model is pluggable:
 
 - :class:`DriftModel` — deterministic stub (mean pct-change drift) so
   tests and the correctness gate never need binary artifacts;
@@ -28,7 +29,6 @@ from dataclasses import dataclass
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from . import artifacts, serving, xgb_ubjson
 from .schemas import symbol_key
@@ -122,10 +122,11 @@ def forecast_from_hist(query, model, scaler, symbol: str, steps: int) -> list | 
     model.n_features_in_`` hourly closes of ``symbol`` (any URL form)
     from the ``hist`` table, then :func:`recursive_forecast`.
 
-    ``query(build)`` runs ``build(hist_df)`` on the hist table and
-    returns its rows, or None when there is no table — then so does
-    this. Fewer than k rows raise :class:`InsufficientHistory` with the
-    reference's found/need message (``app.py:226-227``)."""
+    ``query(build)`` runs ``build(hist)`` on a snapshot of the hist
+    table (``serving.load_hist``) and returns its result, or None when
+    there is no table — then so does this. Fewer than k rows raise
+    :class:`InsufficientHistory` with the reference's found/need
+    message (``app.py:226-227``)."""
     k = model.n_features_in_
     sym = symbol_key(symbol, "hist")
     rows = query(lambda hist: serving.model_input_topk(hist, sym, "1h", k))
@@ -135,9 +136,8 @@ def forecast_from_hist(query, model, scaler, symbol: str, steps: int) -> list | 
         raise InsufficientHistory(
             f"Not enough recent historical data for {symbol} (found {len(rows)}, need {k})."
         )
-    closes = [float(r["close"]) for r in rows]
-    last_ms = int(rows[-1]["timestamp_dt"].timestamp() * 1000)
-    return recursive_forecast(closes, last_ms, steps=steps, model=model, scaler=scaler)
+    closes = [float(c) for _, c in rows]
+    return recursive_forecast(closes, rows[-1][0], steps=steps, model=model, scaler=scaler)
 
 
 def forecast_all_symbols(

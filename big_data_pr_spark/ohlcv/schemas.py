@@ -1,8 +1,8 @@
 """Declared column contracts of the Lambda tables (SURVEY.md §1.3:
 schemas are fixed and declared, never inferred). Each contract is one
 DDL string in :data:`CONTRACTS`; writers project through
-:func:`columns`, readers hand the DDL to ``spark.read.schema`` or
-``from_json``.
+:func:`columns`, Spark readers hand the DDL to ``spark.read.schema`` or
+``from_json``, and serving maps it to Arrow (``serving.arrow_schema``).
 
 - ``csv``: raw candle file, ``timestamp`` in epoch milliseconds of the
   candle open (reference ``batch_processor.py:21-29``);
@@ -38,9 +38,14 @@ CONTRACTS = {
 }
 
 
+def fields(table: str) -> list[tuple[str, str]]:
+    """(name, DDL type) of each column of ``table``'s contract, in order."""
+    return [(n.strip("`"), t) for n, t, *_ in (f.split(" ") for f in CONTRACTS[table].split(", "))]
+
+
 def names(table: str) -> list[str]:
     """The column names of ``table``'s contract, in order."""
-    return [f.split(" ", 1)[0].strip("`") for f in CONTRACTS[table].split(", ")]
+    return [n for n, _ in fields(table)]
 
 
 def columns(table: str, derived: dict[str, Column] | None = None) -> list[Column]:

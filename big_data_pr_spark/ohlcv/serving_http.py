@@ -1,6 +1,8 @@
 """HTTP serving facade — the reference's Flask+Elasticsearch app
 (reference ``app.py:86-244``) re-expressed as a dependency-free stdlib
-``http.server`` layer over the Spark serving tables.
+``http.server`` layer over the parquet serving tables that Spark's
+``batch`` and ``stream`` write. Serving itself needs no Spark and no
+JVM: every route answers from ``serving.py``'s Arrow snapshots.
 
 Route-for-route parity with the reference, including its error
 contract (status codes and message shapes), minus the Chart.js
@@ -17,16 +19,19 @@ available symbols + initial selection — as a minimal document):
 Design notes (documented divergences, all behavior-preserving):
 
 - ES indexes become parquet serving tables read by path; every ES
-  query-DSL construct maps per ``serving.py``'s table (term → equality
-  predicate, range → between, sort+size → orderBy+limit) — the lookups
-  stay partition-prunable scans, so the same facade in front of a
-  100 TB hist table serves from partition/file pruning, not full scans.
+  query-DSL construct maps per ``serving.py``'s table (term → dict
+  lookup or one hive partition, range → binary search or filter,
+  sort+size → sort + slice). ``latest``, ``stats`` and the chart log
+  within retention are held in memory, one snapshot per committed
+  version; ``hist`` never is: history and forecast open only the
+  requested symbol's partition, so the same facade in front of a
+  100 TB hist table serves from partition pruning, not full scans.
 - Serving runs beside the writers, as the reference's app runs beside
   ES upserts: each request reads each table's few-byte commit marker
   (``_LATEST`` of a versioned table, ``operators/versioned.py``; the
-  chart file sink's ``_spark_metadata`` log) and re-plans only a table
-  whose marker moved. Nothing committed yet → absent, so ``serve`` may
-  start before the stream's first epoch.
+  chart file sink's ``_spark_metadata`` log) and loads a new snapshot
+  only of a table whose marker moved. Nothing committed yet → absent,
+  so ``serve`` may start before the stream's first epoch.
 - The recursive forecast window size ``k`` derives from the decoded
   model artifact's ``n_features_in_`` instead of the reference's
   hardcoded per-symbol table (app.py:203-206) — same values for the
@@ -42,9 +47,12 @@ Design notes (documented divergences, all behavior-preserving):
   form ("BTC/USDT"), ``hist`` on the candle filename's underscore form
   ("BTC_USDT"). URL forms ("BTC-USDT", "BTC_USDT") are decoded
   endpoint-side like the reference (app.py:94 ``replace('-','/')``).
+- A path segment is percent-decoded after the path is split, and a
+  decoded segment that holds ``/`` matches no route (404), as with
+  Flask's default converter: ``..%2F`` can never reach the artifact
+  paths the predict route joins.
 - Results that reach JSON are serving-sized by construction (get-by-id,
-  limit 200, limit 10000, top-k), so the driver-side collect is the
-  endpoint payload, never a data-scale funnel.
+  limit 200, limit 10000, top-k).
 """
 
 from __future__ import annotations
@@ -57,14 +65,9 @@ from datetime import datetime, timezone
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, unquote, urlparse
 
-from py4j.protocol import Py4JJavaError
-from pyspark.errors import PySparkException
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
 from ..operators import versioned
 from . import forecast, serving
-from .schemas import CHART_TS, CONTRACTS, symbol_key
+from .schemas import symbol_key
 
 PREDICTION_STEPS_XGBOOST = 24  # app.py:23
 
@@ -72,47 +75,35 @@ PREDICTION_STEPS_XGBOOST = 24  # app.py:23
 _RANGE_DAYS = {"1m": 30, "3m": 90, "6m": 180, "1y": 365}
 
 
-def _row_dict(row) -> dict:
-    """Row → JSON-safe dict (timestamps → ISO strings)."""
-    out = {}
-    for k, v in row.asDict().items():
-        out[k] = v.isoformat(sep=" ") if isinstance(v, datetime) else v
-    return out
-
-
-def _ts_ms(dt: datetime) -> int:
-    if dt.tzinfo is None:
-        dt = dt.replace(tzinfo=timezone.utc)
-    return int(dt.timestamp() * 1000)
-
-
-def _table_version(path: str | None) -> tuple[int, str] | None:
-    """(version, directory to read) of a serving table, or None while
-    nothing is committed: a versioned table's ``_LATEST`` pointer, else
-    the modification time of a Spark file sink's ``_spark_metadata`` log
-    (each micro-batch commit adds a file). One small read or stat."""
+def _table_version(table: str, path: str | None) -> tuple[int, str] | None:
+    """(version, what to load) of a serving table, or None while
+    nothing is committed: for the chart, the modification time of its
+    file sink's ``_spark_metadata`` log (each micro-batch commit adds a
+    file) and the sink's root; for the versioned tables, the ``_LATEST``
+    pointer and its version directory. One small read or stat."""
     if not path:
         return None
+    if table == "chart":
+        try:
+            return os.stat(os.path.join(path, "_spark_metadata")).st_mtime_ns, path
+        except OSError:
+            return None
     ver = versioned.current_version(path)
-    if ver is not None:
-        return ver, versioned.version_dir(path, ver)
-    try:
-        return os.stat(os.path.join(path, "_spark_metadata")).st_mtime_ns, path
-    except OSError:
-        return None
+    return None if ver is None else (ver, versioned.version_dir(path, ver))
 
 
 class ServingBackend:
     """The five endpoint computations over the serving tables, given by
     path (versioned ``hist``/``latest``/``stats``, the ``chart`` file
-    sink) and read with their declared contracts (``schemas.CONTRACTS``).
-    Each request reads the table's version and re-plans the table only
-    when it changed. A table not configured or not yet committed is
-    absent: the realtime/chart endpoints then answer with
-    their empty shapes, but ``historical_data`` 404s (its upstream route
-    404s on a missing ES index — app.py:190). ``now_fn`` yields the
-    chart window's "now" Column — ``F.current_timestamp()`` in
-    production, a literal in tests for determinism.
+    sink). Each request reads the table's version; the table's snapshot
+    (``serving.LOADERS``) is loaded again only when that changed, and
+    ``snapshots`` holds (version, snapshot) per table. A table not
+    configured or not yet committed is absent: the realtime/chart
+    endpoints then answer with their empty shapes, but
+    ``historical_data`` 404s (its upstream route 404s on a missing ES
+    index — app.py:190). ``now_fn`` gives "now" as a UTC ``datetime``,
+    read once per request by the chart and history ranges
+    (``current_timestamp()``); tests pin it.
     """
 
     def __init__(
@@ -125,72 +116,64 @@ class ServingBackend:
         now_fn=None,
     ):
         self.paths = {"hist": hist, "latest": latest, "stats": stats, "chart": chart}
-        self.plans: dict[str, tuple[int, DataFrame]] = {}  # table -> (version, plan)
-        self.lock = threading.Lock()
+        self.snapshots: dict[str, tuple[int, object]] = {}  # table -> (version, snapshot)
+        self.locks = {t: threading.Lock() for t in self.paths}
         self.artifacts_dir = artifacts_dir
-        self.now_fn = now_fn or F.current_timestamp
+        self.now_fn = now_fn or (lambda: datetime.now(timezone.utc))
 
-    def _plan(self, table: str) -> tuple[int, DataFrame] | None:
-        # the pointer is read under the lock, so a request that read an
-        # older version can never replace a newer cached plan
-        with self.lock:
-            got = _table_version(self.paths[table])
+    def _snapshot(self, table: str) -> tuple[int, object] | None:
+        # the pointer is read and the snapshot loaded under the table's
+        # lock, so a request that read an older version can never
+        # replace a newer snapshot
+        with self.locks[table]:
+            got = _table_version(table, self.paths[table])
             if got is None:
                 return None
-            cached = self.plans.get(table)
+            cached = self.snapshots.get(table)
             if cached is None or cached[0] != got[0]:
-                # declared, so a re-plan infers nothing from the files
-                reader = SparkSession.builder.getOrCreate().read.schema(CONTRACTS[table])
-                if table == "chart":
-                    # retention drops partitions whose files the sink's log still lists
-                    reader = reader.option("ignoreMissingFiles", "true")
-                cached = self.plans[table] = (got[0], reader.parquet(got[1]))
+                cached = self.snapshots[table] = (got[0], serving.LOADERS[table](got[1]))
             return cached
 
-    def _query(self, table: str, build) -> list | None:
-        """``build(df).collect()`` on the table's committed version; None
-        while the table is absent. A plan or scan of a version a writer
-        vacuumed under it fails; if the version moved on meanwhile, the
-        request reads it again and runs once more."""
+    def query(self, table: str, fn):
+        """``fn(snapshot)`` on the table's committed version; None while
+        the table is absent. A load, or a hist read, of a version a
+        writer vacuumed after the pointer read fails; if the version
+        moved on meanwhile, the request reads it again and runs once
+        more. A snapshot in memory answers after its directory is gone."""
         pinned = None
         try:
-            plan = self._plan(table)
-            if plan is None:
+            snap = self._snapshot(table)
+            if snap is None:
                 return None
-            pinned = plan[0]
-            return build(plan[1]).collect()
-        except (PySparkException, Py4JJavaError):
-            now = _table_version(self.paths[table])
+            pinned = snap[0]
+            return fn(snap[1])
+        except OSError:
+            now = _table_version(table, self.paths[table])
             if now is not None and now[0] == pinned:
                 raise
-        plan = self._plan(table)
-        return None if plan is None else build(plan[1]).collect()
+        snap = self._snapshot(table)
+        return None if snap is None else fn(snap[1])
 
     # -- dropdown data (app.py:46-83) ---------------------------------
     def symbols(self) -> list[str]:
-        return [r["symbol"] for r in self._query("latest", serving.distinct_symbols) or []]
+        return self.query("latest", serving.distinct_symbols) or []
 
     def symbol_timeframes(self) -> list[str]:
-        rows = self._query("hist", serving.distinct_symbol_timeframes) or []
-        return [symbol_key(r["symbol_tf"], "hist") for r in rows]
+        keys = self.query("hist", serving.distinct_symbol_timeframes) or []
+        return [symbol_key(k, "hist") for k in keys]
 
     # -- /api/realtime_stats (app.py:92-107) ---------------------------
     def realtime_stats(self, encoded_symbol: str) -> dict:
         sym = symbol_key(encoded_symbol, "latest")
-        latest = self._query("latest", lambda df: df.filter(F.col("symbol") == sym).limit(1))
-        # the reference's sort + size 1 (app.py:102-104)
-        stats = self._query("stats", lambda df: df.filter(F.col("symbol") == sym)
-                            .orderBy(F.desc("window_end")).limit(1))
         return {
-            "latest": _row_dict(latest[0]) if latest else {},
-            "stats": _row_dict(stats[0]) if stats else {},
+            "latest": dict(self.query("latest", lambda rows: rows.get(sym)) or {}),
+            "stats": dict(self.query("stats", lambda rows: rows.get(sym)) or {}),
         }
 
     # -- /api/chart_data_1m (app.py:109-135) ---------------------------
     def chart_data_1m(self, encoded_symbol: str) -> list[list]:
-        sym = symbol_key(encoded_symbol, "chart")
-        rows = self._query("chart", lambda df: serving.chart_data_1m(df, sym, self.now_fn()))
-        return [[_ts_ms(r[CHART_TS]), r["close"]] for r in rows or []]
+        sym, now = symbol_key(encoded_symbol, "chart"), self.now_fn()
+        return self.query("chart", lambda chart: serving.chart_data_1m(chart, sym, now)) or []
 
     # -- /api/historical_data (app.py:153-193) --------------------------
     def historical_data(self, symbol_timeframe: str, range_str: str):
@@ -199,17 +182,16 @@ class ServingBackend:
             return {"error": "Invalid symbol_timeframe format."}, 400
         timeframe = parts[-1]
         symbol = "_".join(parts[:-1])
-        rows = self._query("hist", lambda df: serving.historical_data(
-            df, symbol_key(symbol, "hist"), timeframe, _RANGE_DAYS.get(range_str)))
+        sym, now = symbol_key(symbol, "hist"), self.now_fn()
+        rows = self.query("hist", lambda hist: serving.historical_data(
+            hist, sym, timeframe, now, _RANGE_DAYS.get(range_str)))
         if rows is None:
             # app.py:190: this route 404s on NotFoundError (missing ES
             # index) — unlike realtime/chart, which return empty shapes
             return {"error": "historical table not found."}, 404
         symbol = symbol.replace("_", "/")  # the dataset labels' form
-        labels = [r["timestamp_dt"].strftime("%Y-%m-%d %H:%M:%S") for r in rows]
-        closes = [r["close"] for r in rows]
-        sma7 = [r["sma_7"] for r in rows]
-        sma30 = [r["sma_30"] for r in rows]
+        labels = [t.strftime("%Y-%m-%d %H:%M:%S") for t in rows.column("timestamp_dt").to_pylist()]
+        closes, sma7, sma30 = (rows.column(c).to_pylist() for c in ("close", "sma_7", "sma_30"))
         # dataset entries replicate the reference's Chart.js payload
         # (app.py:184-188) so its front end renders unmodified
         datasets = [
@@ -279,7 +261,7 @@ class ServingBackend:
         model, scaler = forecast.load_symbol_artifacts(self.artifacts_dir, symbol_req)
         try:
             preds = forecast.forecast_from_hist(
-                lambda build: self._query("hist", build), model, scaler,
+                lambda build: self.query("hist", build), model, scaler,
                 symbol_req, PREDICTION_STEPS_XGBOOST,
             )
         except forecast.InsufficientHistory as exc:
@@ -342,25 +324,28 @@ def make_handler(backend: ServingBackend):
         def do_GET(self):  # noqa: N802 (stdlib handler contract)
             parsed = urlparse(self.path)
             path = parsed.path.rstrip("/") or "/"
+            route, _, seg = path.rpartition("/")
+            # decoded after the split: a %2F in a segment is data, and a
+            # segment holding "/" matches no route (as Flask's default
+            # converter), so it can never reach a path join
+            arg = unquote(seg)
             try:
                 if path == "/":
                     self._send(200, backend.realtime_page(), "text/html")
                 elif path == "/historical":
                     self._send(200, backend.historical_page(), "text/html")
-                elif path.startswith("/api/realtime_stats/"):
-                    enc = unquote(path.rsplit("/", 1)[1])
-                    self._send(200, backend.realtime_stats(enc))
-                elif path.startswith("/api/chart_data_1m/"):
-                    enc = unquote(path.rsplit("/", 1)[1])
-                    self._send(200, backend.chart_data_1m(enc))
-                elif path.startswith("/api/historical_data/"):
-                    sym_tf = unquote(path.rsplit("/", 1)[1])
+                elif "/" in arg:
+                    self._send(404, {"error": f"no route for {path}"})
+                elif route == "/api/realtime_stats":
+                    self._send(200, backend.realtime_stats(arg))
+                elif route == "/api/chart_data_1m":
+                    self._send(200, backend.chart_data_1m(arg))
+                elif route == "/api/historical_data":
                     rng = parse_qs(parsed.query).get("range", ["all"])[0]
-                    payload, code = backend.historical_data(sym_tf, rng)
+                    payload, code = backend.historical_data(arg, rng)
                     self._send(code, payload)
-                elif path.startswith("/api/predict_xgboost/"):
-                    sym_tf = unquote(path.rsplit("/", 1)[1])
-                    payload, code = backend.predict(sym_tf)
+                elif route == "/api/predict_xgboost":
+                    payload, code = backend.predict(arg)
                     self._send(code, payload)
                 else:
                     self._send(404, {"error": f"no route for {path}"})

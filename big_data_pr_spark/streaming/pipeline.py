@@ -414,8 +414,9 @@ def apply_retention(chart_path: str, keep_dates: Sequence[str]) -> list[str]:
     (``README.md:74-98``) — drop event_date partitions not in
     ``keep_dates``. On a real cluster this is a metadata-only partition
     drop (or Delta ``VACUUM``); here, directory removal. The file sink's
-    ``_spark_metadata`` log still lists the dropped files, so readers of
-    the chart set ``ignoreMissingFiles`` (as ``serve`` does)."""
+    ``_spark_metadata`` log still lists the dropped files: Spark readers
+    of the chart set ``ignoreMissingFiles``, and ``serve`` skips listed
+    files that are gone (``serving.load_chart``)."""
     dropped = []
     if not os.path.isdir(chart_path):
         return dropped

@@ -13,6 +13,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from datetime import datetime, timezone
 import urllib.error
 import urllib.request
 
@@ -120,8 +121,6 @@ def lambda_tables(spark, tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def server(lambda_tables, tmp_path_factory):
-    from pyspark.sql import functions as F
-
     art = tmp_path_factory.mktemp("artifacts")
     for sym in SYMS:  # the route checks that both files exist
         (art / f"{sym}_xgboost_model.pkl").write_bytes(b"synthetic")
@@ -130,7 +129,7 @@ def server(lambda_tables, tmp_path_factory):
     mp.setattr(xgb_ubjson, "load_reference_regressor", lambda _p: (_Model(), {}))
     mp.setattr(artifacts, "load_minmax_scaler",
                lambda p: _scaler(p.rsplit("/", 1)[1].removesuffix("_scaler.pkl")))
-    now = F.expr(f"timestamp_millis({NEWEST_M})")
+    now = datetime.fromtimestamp(NEWEST_M / 1000, timezone.utc)
     backend = ServingBackend(**lambda_tables, artifacts_dir=str(art), now_fn=lambda: now)
     srv, port = start_server(backend)
     yield port
@@ -149,8 +148,6 @@ def _get(port: int, path: str):
 
 
 def _utc_ms(s: str) -> int:
-    from datetime import datetime, timezone
-
     return int(datetime.fromisoformat(s).replace(tzinfo=timezone.utc).timestamp() * 1000)
 
 
@@ -279,3 +276,152 @@ def test_written_tables_have_exactly_their_contract(spark, lambda_tables, table)
     declared = spark.createDataFrame([], CONTRACTS[table])
     assert {f.name: f.dataType for f in written.schema} == {
         f.name: f.dataType for f in declared.schema}
+
+
+DAY_MS = 86_400_000
+AGES_DAYS = (400, 200, 100, 45, 10)
+
+
+@pytest.fixture(scope="module")
+def aged_hist(spark, tmp_path_factory):
+    """A ``hist`` table from the batch CLI whose hourly candles sit K at
+    a time 400, 200, 100, 45 and 10 days before NOW_MS, for both
+    symbols; ETH_USDT's partition also holds a ``part-*.parquet`` file
+    that is not parquet. Returns (table, candle times, BTC closes)."""
+    root = tmp_path_factory.mktemp("aged")
+    (root / "csv").mkdir()
+    ts = np.array([NOW_MS - age * DAY_MS + i * HOUR_MS for age in AGES_DAYS for i in range(K)])
+    closes = {s: _closes(20 + j, len(ts), 100.0) for j, s in enumerate(SYMS)}
+    for sym in SYMS:
+        rows = [f"{t},{c},{c + 1},{c - 1},{c},1.0,x" for t, c in zip(ts, closes[sym])]
+        (root / "csv" / f"{sym}_1h.csv").write_text(
+            "timestamp,open,high,low,close,volume,datetime_str\n" + "\n".join(rows) + "\n")
+    table = str(root / "hist")
+    assert main(["batch", "--input", str(root / "csv" / "*_1h.csv"), "--table", table]) == 0
+    eth = os.path.join(versioned.version_dir(table, versioned.current_version(table)),
+                       "symbol=ETH_USDT", "timeframe=1h")
+    with open(os.path.join(eth, "part-99999-junk.c000.snappy.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    return table, ts, closes["BTC_USDT"]
+
+
+@pytest.mark.parametrize("rng, days", [("1m", 30), ("3m", 90), ("6m", 180), ("1y", 365),
+                                       ("all", None), ("5y", None)])
+def test_history_ranges_open_only_the_requested_partition(aged_hist, rng, days):
+    """Each range keeps the candles at most its days old (an unknown
+    range is ``all``), read from BTC_USDT's partition alone: the junk
+    file in ETH_USDT's partition is never opened."""
+    table, ts, closes = aged_hist
+    now = datetime.fromtimestamp(NOW_MS / 1000, timezone.utc)
+    backend = ServingBackend(hist=table, now_fn=lambda: now)
+    body, code = backend.historical_data("BTC_USDT_1h", rng)
+    keep = ts >= NOW_MS - days * DAY_MS if days else np.ones(len(ts), bool)
+    assert code == 200 and len(body["labels"]) == keep.sum()
+    np.testing.assert_allclose(body["datasets"][0]["data"], closes[keep], rtol=1e-12)
+    np.testing.assert_allclose(body["datasets"][1]["data"], _sma(closes, 7)[keep], rtol=1e-12)
+
+
+def test_forecast_opens_only_the_requested_partition(aged_hist, tmp_path, capsys, monkeypatch):
+    """The route and the CLI forecast BTC_USDT beside the junk file in
+    ETH_USDT's partition, which does break a read of ETH_USDT."""
+    import pyarrow as pa
+
+    table, ts, _ = aged_hist
+    monkeypatch.setattr(xgb_ubjson, "load_reference_regressor", lambda _p: (_Model(), {}))
+    monkeypatch.setattr(artifacts, "load_minmax_scaler", lambda _p: _scaler("BTC_USDT"))
+    for name in ("BTC_USDT_xgboost_model.pkl", "BTC_USDT_scaler.pkl"):
+        (tmp_path / name).write_bytes(b"synthetic")
+    backend = ServingBackend(hist=table, artifacts_dir=str(tmp_path))
+    body, code = backend.predict("BTC_USDT_1h")
+    assert code == 200
+    assert [p["timestamp"] for p in body] == [ts[-1] + i * HOUR_MS for i in range(1, 25)]
+    capsys.readouterr()
+    assert main(["forecast", "--symbol", "BTC_USDT", "--artifacts", str(tmp_path),
+                 "--hist", table, "--steps", "24"]) == 0
+    got = [json.loads(x) for x in capsys.readouterr().out.splitlines()]
+    assert [g["predicted_price"] for g in got] == [round(p["predicted_price"], 2) for p in body]
+    with pytest.raises(pa.ArrowInvalid):
+        backend.historical_data("ETH_USDT_1h", "all")
+
+
+def test_history_key_from_request_text_never_reaches_a_path(aged_hist, monkeypatch):
+    """A decoded ``%2F`` in the symbol_timeframe is no partition of the
+    pinned version: the empty answer, and every file read lies inside
+    the table."""
+    from urllib.parse import unquote
+
+    from big_data_pr_spark.ohlcv import serving
+
+    table = aged_hist[0]
+    opened, read = [], serving._read
+    monkeypatch.setattr(serving, "_read", lambda path, *a: opened.append(path) or read(path, *a))
+    backend = ServingBackend(hist=table)
+    for key in ("BTC_USDT_1h%2F..", "..%2F..%2FBTC_USDT_1h", "BTC_USDT%2F..%2F..%2Fhist_1h"):
+        body, code = backend.historical_data(unquote(key), "all")
+        assert code == 200 and body["labels"] == [], key
+    assert backend.historical_data("BTC_USDT_1h", "all")[0]["labels"]
+    inside = os.path.realpath(table) + os.sep
+    assert opened and all(os.path.realpath(p).startswith(inside) for p in opened)
+
+
+_NO_JVM_CHILD = """
+import json, os, shutil, sys
+from datetime import datetime, timezone
+
+import test_lambda_e2e as e
+from big_data_pr_spark.__main__ import main
+from big_data_pr_spark.ohlcv import artifacts, xgb_ubjson
+from big_data_pr_spark.ohlcv.serving_http import ServingBackend
+
+tables, art, newest_m, paths = json.loads(sys.argv[1])
+assert shutil.which("java") is None and "JAVA_HOME" not in os.environ
+xgb_ubjson.load_reference_regressor = lambda _p: (e._Model(), {})
+artifacts.load_minmax_scaler = lambda p: e._scaler(os.path.basename(p).removesuffix("_scaler.pkl"))
+now = datetime.fromtimestamp(newest_m / 1000, timezone.utc)
+backend = ServingBackend(**tables, artifacts_dir=art, now_fn=lambda: now)
+routes = {
+    "realtime_stats": lambda a: (backend.realtime_stats(a), 200),
+    "chart_data_1m": lambda a: (backend.chart_data_1m(a), 200),
+    "historical_data": lambda a: backend.historical_data(*a.split("?range=")),
+    "predict_xgboost": backend.predict,
+}
+answers = {p: routes[p.split("/")[2]](p.split("/")[3]) for p in paths}
+answers["/"] = (backend.realtime_page(), 200)
+answers["/historical"] = (backend.historical_page(), 200)
+assert main(["forecast", "--symbol", "ETH_USDT", "--artifacts", art, "--hist", tables["hist"]]) == 0
+from pyspark import SparkContext
+assert SparkContext._active_spark_context is None
+print(json.dumps(answers))
+"""
+
+
+def test_routes_and_forecast_cli_answer_where_no_jvm_can_start(server, lambda_tables, tmp_path):
+    """``serve``'s backend and ``forecast --hist`` need no Spark: in a
+    process with no java on PATH and no JAVA_HOME, every route answers
+    over the CLI-written tables exactly as the in-process server does."""
+    import subprocess
+    import sys
+
+    paths = [p for s in SYMS for p in (
+        f"/api/realtime_stats/{s.replace('_', '-')}", f"/api/chart_data_1m/{s.replace('_', '-')}",
+        f"/api/historical_data/{s}_1h?range=all", f"/api/historical_data/{s}_1h?range=1m",
+        f"/api/predict_xgboost/{s}_1h")] + ["/api/realtime_stats/DOGE-USDT"]
+    art = str(tmp_path)
+    for sym in SYMS:
+        for name in (f"{sym}_xgboost_model.pkl", f"{sym}_scaler.pkl"):
+            (tmp_path / name).write_bytes(b"synthetic")
+    env = {k: v for k, v in os.environ.items() if k not in ("JAVA_HOME", "SPARK_HOME")}
+    env["PATH"] = os.pathsep.join(d for d in env.get("PATH", "").split(os.pathsep)
+                                  if d and not os.path.exists(os.path.join(d, "java")))
+    here = os.path.dirname(os.path.abspath(__file__))
+    env["PYTHONPATH"] = os.pathsep.join([os.path.dirname(here), here])
+    out = subprocess.run(
+        [sys.executable, "-c", _NO_JVM_CHILD, json.dumps([lambda_tables, art, NEWEST_M, paths])],
+        env=env, capture_output=True, text=True, timeout=300)
+    assert out.returncode == 0, out.stderr[-2000:]
+    *forecast_lines, answers = out.stdout.strip().splitlines()
+    answers = json.loads(answers)
+    for path in paths + ["/", "/historical"]:
+        assert answers[path][0] == _get(server, path)[1], path
+    got = [json.loads(x)["predicted_price"] for x in forecast_lines]
+    assert got == pytest.approx(_replay("ETH_USDT"), abs=0.006)

@@ -5,6 +5,7 @@ idempotency, invalid-filename filtering, empty-input early exit."""
 from __future__ import annotations
 
 import os
+from datetime import datetime, timezone
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,6 +13,7 @@ from pyspark.sql import functions as F
 from big_data_pr_spark.ohlcv import batch, serving
 from big_data_pr_spark.ohlcv.forecast import DriftModel, forecast_all_symbols, recursive_forecast
 from big_data_pr_spark.ohlcv.schemas import symbol_key, url_symbol
+from big_data_pr_spark.operators import versioned
 
 HOUR_MS = 3_600_000
 T0 = 1_700_000_400_000  # aligned epoch ms
@@ -94,21 +96,17 @@ def test_empty_input_early_exit(spark, tmp_path):
 def test_serving_queries(spark, csv_dir, tmp_path):
     table = str(tmp_path / "serving")
     batch.run_batch(spark, [csv_dir + "/*.csv"], table)
-    hist = spark.read.parquet(table)
-    assert [r[0] for r in serving.distinct_symbols(hist).collect()] == [
-        "BTC_USDT",
-        "ETH_USDT",
-    ]
-    assert [r[0] for r in serving.distinct_symbol_timeframes(hist).collect()] == [
+    hist = serving.load_hist(versioned.version_dir(table, versioned.current_version(table)))
+    assert serving.distinct_symbol_timeframes(hist) == [
         "BTC_USDT_1h",
         "ETH_USDT_1h",
     ]
-    hd = serving.historical_data(hist, "BTC_USDT", "1h").collect()
-    assert len(hd) == 50
-    assert hd[0]["close"] == pytest.approx(100.5)
-    top = serving.model_input_topk(hist, "BTC_USDT", "1h", 5).collect()
+    hd = serving.historical_data(hist, "BTC_USDT", "1h", datetime.now(timezone.utc))
+    assert hd.num_rows == 50
+    assert hd["close"][0].as_py() == pytest.approx(100.5)
+    top = serving.model_input_topk(hist, "BTC_USDT", "1h", 5)
     assert len(top) == 5
-    assert top[-1]["close"] == pytest.approx(149.5)  # newest, ascending order
+    assert top[-1][1] == pytest.approx(149.5)  # newest, ascending order
 
 
 def test_symbol_encode_decode(spark):

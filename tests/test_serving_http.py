@@ -2,10 +2,11 @@
 parity with reference app.py:86-244 — payload shapes, symbol decoding,
 the Chart.js dataset contract, and the full error contract (400/404
 with the reference's message shapes). The server runs in-process on an
-ephemeral port against tiny versioned tables built from the declared
-contracts (``schemas.CONTRACTS``) in the layers' stored forms
-(underscore symbols in hist, slash symbols and ``@timestamp`` in the
-stream tables); the predict endpoint exercises the REAL reference
+ephemeral port against tiny tables built from the declared contracts
+(``schemas.CONTRACTS``) as the layers store them (versioned hist,
+latest and stats; the chart through Spark's file sink; underscore
+symbols in hist, slash symbols and ``@timestamp`` in the stream
+tables); the predict endpoint exercises the REAL reference
 artifacts when present."""
 
 from __future__ import annotations
@@ -44,6 +45,18 @@ def _table(spark, table: str, rows: list[tuple], path, partition_by=()):
     return str(path)
 
 
+def _chart(spark, rows: list[tuple], path):
+    """``rows`` committed to ``path`` by Spark's file sink, partitioned
+    by ``event_date``, as ``stream`` writes the chart."""
+    src = f"{path}.src"
+    spark.createDataFrame(rows, CONTRACTS["chart"]).write.parquet(src)
+    (spark.readStream.schema(CONTRACTS["chart"]).parquet(src)
+     .writeStream.format("parquet").partitionBy("event_date")
+     .option("path", str(path)).option("checkpointLocation", f"{path}.cp")
+     .trigger(availableNow=True).start().awaitTermination())
+    return str(path)
+
+
 def _hist_row(sym: str, hour: int, close: float, sma_7: float, sma_30: float) -> tuple:
     ms = BASE_MS + hour * 3600000
     return (f"{sym}_1h_hist_{ms // 1000}", sym, "1h", ms // 1000, _ts(ms),
@@ -57,8 +70,6 @@ def _latest_row(sym: str, price: float) -> tuple:
 
 @pytest.fixture(scope="module")
 def server(spark, tmp_path_factory):
-    from pyspark.sql import functions as F
-
     tdir = tmp_path_factory.mktemp("serving")
     closes = [80000.0, 80900.0, 80400.0, 81300.0, 80700.0, 81100.0,
               80500.0, 81250.0]
@@ -74,14 +85,13 @@ def server(spark, tmp_path_factory):
         (_ts(ms), "BTC/USDT", 81000.0 + m, 1.0, ms, f"BTC-USDT_1m_{ms}", _ts(ms).date())
         for m, ms in ((m, BASE_MS + m * 60000) for m in range(40))
     ]
-    now_col = F.expr(f"timestamp_millis({BASE_MS} + 39 * 60000)")
     backend = ServingBackend(
         hist=_table(spark, "hist", hist, tdir / "hist", ("symbol", "timeframe")),
         latest=_table(spark, "latest", latest, tdir / "latest"),
         stats=_table(spark, "stats", stats, tdir / "stats"),
-        chart=_table(spark, "chart", chart, tdir / "chart", ("event_date",)),
+        chart=_chart(spark, chart, tdir / "chart"),
         artifacts_dir="/root/reference/trained_models",
-        now_fn=lambda: now_col,
+        now_fn=lambda: _ts(BASE_MS + 39 * 60000),
     )
     srv, port = start_server(backend)
     yield port
@@ -286,3 +296,44 @@ def test_predict_prefix_symbol_not_treated_as_configured(spark, tmp_path):
         assert "No specific XGBoost window size configured" in json.loads(body)["error"]
     finally:
         srv.shutdown()
+
+
+def test_encoded_slash_in_a_segment_matches_no_route(tmp_path, monkeypatch):
+    """A ``%2F`` is decoded only after the path is split into segments;
+    a segment that then holds ``/`` matches no route (404, as Flask's
+    default converter), so ``..%2F`` never reaches the artifact paths
+    the predict route joins, even where files wait beside the
+    artifacts directory."""
+    from big_data_pr_spark.ohlcv import artifacts, xgb_ubjson
+
+    loaded = []
+    monkeypatch.setattr(xgb_ubjson, "load_reference_regressor", loaded.append)
+    monkeypatch.setattr(artifacts, "load_minmax_scaler", loaded.append)
+    art = tmp_path / "artifacts"
+    art.mkdir()
+    for suffix in ("_xgboost_model.pkl", "_scaler.pkl"):
+        (tmp_path / f"x_BTC_USDT{suffix}").write_bytes(b"x")
+    srv, port = start_server(ServingBackend(artifacts_dir=str(art)))
+    try:
+        for path in ("/api/predict_xgboost/..%2Fx_BTC_USDT_1h", "/api/predict_xgboost/..%2fx_BTC_USDT_1h",
+                     "/api/realtime_stats/BTC%2FUSDT", "/api/chart_data_1m/..%2F..",
+                     "/api/historical_data/BTC_USDT_1h%2F..?range=all"):
+            code, body, _ = _get(port, path)
+            assert (code, json.loads(body)["error"][:8]) == (404, "no route"), path
+    finally:
+        srv.shutdown()
+    assert loaded == []
+
+
+def test_hist_dropdown_sorts_the_joined_names(tmp_path):
+    """``/historical`` lists ``{symbol}_{timeframe}`` from the partition
+    directory names alone (these hold no file), unescaped as Spark
+    escapes them, and sorted as joined strings: ``A0_USDT_1h`` before
+    ``A_USDT_1h``, where sorting (symbol, timeframe) would put ``A_USDT`` first."""
+    from big_data_pr_spark.ohlcv import serving
+
+    for sym, tf in (("A_USDT", "1h"), ("A0_USDT", "1h"), ("B%3AX", "4h"), ("A_USDT", "4h")):
+        (tmp_path / f"symbol={sym}" / f"timeframe={tf}").mkdir(parents=True)
+    hist = serving.load_hist(str(tmp_path))
+    assert serving.distinct_symbol_timeframes(hist) == ["A0_USDT_1h", "A_USDT_1h", "A_USDT_4h", "B:X_4h"]
+    assert hist[("B:X", "4h")] == str(tmp_path / "symbol=B%3AX" / "timeframe=4h")

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import time
+from datetime import datetime, timezone
 
 import pytest
 from pyspark.sql import functions as F
@@ -355,7 +356,7 @@ def test_chart_route_answers_after_retention(spark, tmp_path):
     assert pipeline.apply_retention(chart_path, keep_dates=["2023-11-15"]) == [
         "event_date=2023-11-14"
     ]
-    now = F.expr(f"timestamp_millis({T0_MS + (day2 + 4) * 60_000})")
+    now = datetime.fromtimestamp((T0_MS + (day2 + 4) * 60_000) / 1000, timezone.utc)
     srv, port = start_server(ServingBackend(chart=chart_path, now_fn=lambda: now))
     try:
         with urllib.request.urlopen(f"http://127.0.0.1:{port}/api/chart_data_1m/BTC-USDT") as r:
@@ -364,6 +365,49 @@ def test_chart_route_answers_after_retention(spark, tmp_path):
     finally:
         srv.shutdown()
     assert body == [[T0_MS + (day2 + m) * 60_000, 200.0 + m] for m in range(5)]
+
+
+def test_chart_reads_exactly_the_files_its_log_commits(spark, tmp_path, monkeypatch):
+    """The chart snapshot is the file sink's committed file set: a log
+    compacted every 2 batches (``1.compact``, then batch ``2``) over 3
+    epochs; a listed file that retention removed is skipped, also when
+    it goes between the loader's existence check and its read; an
+    orphan parquet file that the log does not list, in a listed
+    partition, is never read."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from big_data_pr_spark.ohlcv import serving
+    from big_data_pr_spark.ohlcv.serving_http import ServingBackend
+
+    input_dir, out = tmp_path / "in", tmp_path / "out"
+    input_dir.mkdir()
+    day2 = 120  # minutes after T0: 2023-11-15 00:20 UTC
+    epochs = [range(0, 3), range(day2, day2 + 3), range(day2 + 10, day2 + 13)]
+    spark.conf.set("spark.sql.streaming.fileSink.log.compactInterval", "2")
+    try:
+        for e, minutes in enumerate(epochs):
+            _write_batch(input_dir, f"b{e}.json", [_msg("BTC/USDT", m, 100.0 + m) for m in minutes])
+            _run_available(spark, input_dir, out, tmp_path / "cp")
+    finally:
+        spark.conf.unset("spark.sql.streaming.fileSink.log.compactInterval")
+    chart = str(out / "chart")
+    assert {"1.compact", "2"} <= set(os.listdir(os.path.join(chart, "_spark_metadata")))
+    assert pipeline.apply_retention(chart, keep_dates=["2023-11-15"]) == ["event_date=2023-11-14"]
+    orphan = pa.table({"@timestamp": pa.array([T0_MS + (day2 + 5) * 60_000], pa.timestamp("ms")),
+                       "symbol": ["BTC/USDT"], "close": [999.0]})
+    pq.write_table(orphan, os.path.join(chart, "event_date=2023-11-15", "part-99999-orphan.parquet"))
+    listed = serving.chart_files(chart)
+    assert not all(map(os.path.exists, listed))  # epoch 0's files, removed by retention
+    assert not any(f.endswith("orphan.parquet") for f in listed)
+    now = datetime.fromtimestamp((T0_MS + (day2 + 20) * 60_000) / 1000, timezone.utc)
+    got = ServingBackend(chart=chart, now_fn=lambda: now).chart_data_1m("BTC-USDT")
+    assert got == [[T0_MS + m * 60_000, 100.0 + m] for m in (*epochs[1], *epochs[2])]
+    checks = iter([lambda files: files, serving._present])  # the first check misses the removal
+    monkeypatch.setattr(serving, "_present", lambda files: next(checks)(files))
+    assert serving.chart_data_1m(serving.load_chart(chart), "BTC/USDT", now) == got
 
 
 def test_streaming_ema_stateful(spark, tmp_path):
