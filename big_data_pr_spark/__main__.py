@@ -33,10 +33,15 @@ def _spark(app: str):
 
 
 def cmd_batch(args: argparse.Namespace) -> int:
-    from .ohlcv.batch import run_batch
+    from .ohlcv.batch import RUN_COUNTS, run_batch
+    from .operators import versioned
 
+    before = versioned.current_version(args.table)
     n = run_batch(_spark("batch"), args.input, args.table)
-    print(json.dumps({"rows_in_table": n, "table": args.table}))
+    ver = versioned.current_version(args.table)
+    ran = versioned.manifest(args.table, ver).get("extra", {}) if ver != before else {}
+    print(json.dumps({"rows_in_table": n, "table": args.table, "version": ver,
+                      **{k: ran.get(k, 0) for k in RUN_COUNTS}}))
     return 0
 
 

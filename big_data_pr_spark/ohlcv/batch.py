@@ -1,36 +1,82 @@
 """Batch layer: CSV candle ingest → canonical serving table with SMA
-features, idempotent by doc-id (SURVEY.md §3.1, reference
-``batch_processor.py`` end-to-end).
+features, idempotent by doc-id and incremental across runs (SURVEY.md
+§3.1, reference ``batch_processor.py`` end-to-end).
+
+Incremental contract. Each run takes the reference cron's two globs
+(history + hourly updates), as ``run_batch_processor.sh`` does, and
+leaves the same ``hist`` rows a run over every file from scratch would,
+but reads and writes only what changed:
+
+- **Input log.** Every committed version holds ``_inputs.json``: each
+  processed input file as ``{path: [size, mtime_ms]}``, per
+  ``(symbol, timeframe)`` partition its newest ``timestamp_s`` and row
+  count, and the table's row count. Spark and pyarrow skip ``_`` files,
+  it commits with its version's data and is vacuumed with it. The
+  globs are listed with Hadoop ``FileSystem.globStatus`` (any input
+  scheme); only a file that is new, or whose size or mtime changed, is
+  read. A run with nothing new commits nothing and starts no Spark job;
+  it returns the logged row count.
+- **Tie rule.** Rows that share ``(symbol, timeframe, timestamp_s)`` —
+  a candle a later file re-sends — keep the row of the file whose name
+  sorts last: ``X_1h.csv`` sorts before ``X_1h_update_<stamp>.csv`` and
+  updates sort by stamp. A stored row loses to any file's row.
+- **Append.** When every new candle of a partition is newer than its
+  stored newest, SMA-7/30 are computed over the new rows seeded with
+  the 29 stored rows before them (only ``symbol, timeframe,
+  timestamp_s, close`` of the touched partitions are read). The new
+  rows are written as one file; the partition's previous files, and
+  every untouched partition, are hard links into the previous version.
+- **Rewrite.** A partition is rewritten whole — stored rows ∪ new
+  rows, deduped by the tie rule, SMAs recomputed — when a new candle
+  is at or before its stored newest (a re-sent or late candle moves the
+  SMAs after it), or when it already holds :data:`MAX_PARTITION_FILES`
+  files, which bounds the files a reader opens per partition. When a
+  new or changed file sorts before an already processed file of the
+  same partition, the stored row is not necessarily the one the tie
+  rule keeps, so that partition's input files are all read again.
 
 Spark-first divergences from the reference (each deliberate, SURVEY §4):
 - no global ``orderBy`` before the window computation (the reference's
   ``batch_processor.py:104`` adds a redundant exchange+sort; the window
   spec alone provides per-partition order);
 - sink is a versioned Parquet table (``operators/versioned.py``)
-  partitioned by (symbol, timeframe), committed by a key-dedup upsert
-  instead of the Elasticsearch connector (same doc_id keying,
-  ``batch_processor.py:132-148``); like an ES index, a reader never
-  sees it half-written — at production scale this becomes a Delta
-  ``MERGE INTO`` on the identical key expression;
-- eager debug actions (``rdd.isEmpty``/``show`` per stage) are replaced
-  by one ``df.isEmpty()`` early-exit.
+  partitioned by (symbol, timeframe), keyed by the reference's doc_id
+  (``batch_processor.py:132-148``) instead of the Elasticsearch
+  connector; like an ES index, a reader never sees it half-written;
+- eager debug actions (``rdd.isEmpty``/``show`` per stage) are gone:
+  the input listing decides the early exit.
 
-Scale: the only shuffle in the pipeline is the window partitioning by
-(symbol, timeframe); ingest, regex extraction, casts and doc-id build
-are all narrow. The upsert dedup shuffles by doc_id — at 100 TB both
-exchanges are unavoidable and minimal (they ARE the semantics).
+Scale: the only shuffle of a run is the window partitioning by
+(symbol, timeframe), which the tie-rule dedup shares; ingest, regex
+extraction, casts and doc-id build are all narrow. An append run reads
+the new files, 29 stored rows per touched partition and the new files'
+footers; its cost does not grow with the table.
 """
 
 from __future__ import annotations
 
+import json
+import os
+import re
 from collections.abc import Sequence
+from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..fsutil import require_local
 from ..operators import versioned
-from .schemas import CONTRACTS, FILENAME_PATTERN, columns
+from .schemas import CONTRACTS, FILENAME_PATTERN, columns, names
+
+# a partition that already holds this many files is rewritten as one
+MAX_PARTITION_FILES = 8
+_KEYS = ("symbol", "timeframe")
+_SEED = 29  # stored rows before a partition's first new candle that SMA-30 reads
+_INPUTS = "_inputs.json"
+# the per-run counts each batch version's manifest carries (``cmd_batch``'s line)
+RUN_COUNTS = ("files_read", "rows_read", "rows_written", "partitions_rewritten", "partitions_linked")
 
 
 def read_candle_csvs(spark: SparkSession, paths: Sequence[str]) -> DataFrame:
@@ -79,9 +125,19 @@ def with_event_time(df: DataFrame) -> DataFrame:
 def with_sma_features(df: DataFrame) -> DataFrame:
     """W1/W2: trailing SMA-7 / SMA-30 per (symbol, timeframe) ordered by
     event time (reference ``batch_processor.py:109-115``). Warm-up rows
-    average over the rows available — no nulls."""
-    w = Window.partitionBy("symbol", "timeframe").orderBy("timestamp_dt")
-    return df.withColumn(
+    average over the rows available — no nulls.
+
+    Candles are first deduped by the tie rule (the row whose
+    ``source_file`` sorts last wins) with ``lead`` over the same
+    partitioning, so the dedup adds a sort but no exchange."""
+    w = Window.partitionBy(*_KEYS).orderBy("timestamp_s", "source_file")
+    deduped = (
+        df.withColumn("__next", F.lead("timestamp_s").over(w))
+        .filter(~F.col("__next").eqNullSafe(F.col("timestamp_s")))
+        .drop("__next")
+    )
+    w = Window.partitionBy(*_KEYS).orderBy("timestamp_s")
+    return deduped.withColumn(
         "sma_7", F.avg("close").over(w.rowsBetween(-6, 0))
     ).withColumn("sma_30", F.avg("close").over(w.rowsBetween(-29, 0)))
 
@@ -101,50 +157,229 @@ def with_doc_id(df: DataFrame) -> DataFrame:
     )
 
 
-def build_serving_df(spark: SparkSession, input_paths: Sequence[str]) -> DataFrame | None:
-    """Full batch transformation into the ``hist`` contract; returns None
-    on empty input (the reference's early-exit, ``batch_processor.py:56-59``)."""
-    from pyspark.errors import AnalysisException
+def list_inputs(spark: SparkSession, globs: Sequence[str]) -> dict[str, list[int]]:
+    """The files the input globs match, ``{path: [size, mtime_ms]}``,
+    listed through Hadoop ``FileSystem.globStatus`` on each glob's own
+    filesystem (no Spark job). A matched directory contributes the files
+    under it; ``_``/``.``-prefixed names are skipped, as Spark's reader
+    skips them."""
+    jvm, conf = spark._jvm, spark._jsc.hadoopConfiguration()
+    out: dict[str, list[int]] = {}
+    for g in globs:
+        path = jvm.org.apache.hadoop.fs.Path(g)
+        fs = path.getFileSystem(conf)
+        for st in fs.globStatus(path) or []:
+            found = [st]
+            if st.isDirectory():
+                it, found = fs.listFiles(st.getPath(), True), []
+                while it.hasNext():
+                    found.append(it.next())
+            for f in found:
+                if not f.getPath().getName().startswith(("_", ".")):
+                    out[f.getPath().toString()] = [f.getLen(), f.getModificationTime()]
+    return out
 
-    try:
-        raw = read_candle_csvs(spark, input_paths)
-        if raw.isEmpty():
-            return None
-    except AnalysisException:  # glob matched no files → same early-exit
-        return None
-    keyed = extract_key_columns(raw)
-    valid, _rejects = split_valid(keyed)
-    timed = with_event_time(valid)
-    feats = with_sma_features(timed)
-    return with_doc_id(feats).select(*columns("hist"))
+
+def _partition_of(path: str) -> str | None:
+    """The ``symbol=S/timeframe=T`` partition an input file's rows go
+    to, from its name alone (FILENAME_PATTERN), or None for a reject."""
+    m = re.match(FILENAME_PATTERN, path.rsplit("/", 1)[-1])
+    return f"symbol={m[1]}/timeframe={m[2]}" if m else None
 
 
-def upsert_parquet(
-    spark: SparkSession,
-    new_df: DataFrame,
-    table_path: str,
-    key_col: str = "doc_id",
-    partition_cols: Sequence[str] = ("symbol", "timeframe"),
-) -> None:
-    """Idempotent key-dedup upsert into the versioned serving table —
-    the reference's ES upsert (``batch_processor.py:142-148``); new
-    rows win over existing. Commits one new version and vacuums the
-    previous one, so the table root holds exactly one version at rest.
-    """
-    require_local(table_path, "upsert_parquet")  # before any Spark work
-    versioned.upsert_version(
-        spark, table_path, new_df, key_col, partition_by=partition_cols, note="batch"
+def _footer_stats(paths: Sequence[str]) -> tuple[int, int | None]:
+    """Rows and newest ``timestamp_s`` of parquet files, from their
+    footers alone."""
+    rows, newest = 0, None
+    for path in paths:
+        md = pq.read_metadata(path)
+        rows += md.num_rows
+        col = md.schema.names.index("timestamp_s")
+        for g in range(md.num_row_groups):
+            stats = md.row_group(g).column(col).statistics
+            if stats is not None and stats.has_min_max:
+                newest = stats.max if newest is None else max(newest, stats.max)
+    return rows, newest
+
+
+def _data_files(data_dir: str, partition: str) -> list[str]:
+    """The parquet files of one partition of a version, relative to it."""
+    return sorted(
+        os.path.join(partition, f)
+        for f in os.listdir(os.path.join(data_dir, partition))
+        if f.endswith(".parquet")
     )
+
+
+def _partitions(data_dir: str) -> list[str]:
+    """The ``symbol=*/timeframe=*`` partitions of a version directory."""
+    return sorted(
+        os.path.join(s, t)
+        for s in os.listdir(data_dir) if s.startswith("symbol=")
+        for t in os.listdir(os.path.join(data_dir, s)) if t.startswith("timeframe=")
+    )
+
+
+def read_inputs(table_path: str) -> dict:
+    """The committed version's input log: ``files`` ({path: [size,
+    mtime_ms]}), ``keys`` ({partition: [newest timestamp_s, rows]}) and
+    ``rows``. Empty for a table not yet written; a version written
+    without a log gets its keys from the parquet footers, so every file
+    counts as new."""
+    cur = versioned.current_version(table_path)
+    if cur is None:
+        return {"files": {}, "keys": {}, "rows": 0}
+    data_dir = versioned.version_dir(table_path, cur)
+    try:
+        with open(os.path.join(data_dir, _INPUTS)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        keys = {}
+        for p in _partitions(data_dir):
+            rows, newest = _footer_stats([os.path.join(data_dir, f) for f in _data_files(data_dir, p)])
+            keys[p] = [newest, rows]
+        return {"files": {}, "keys": keys, "rows": sum(r for _, r in keys.values())}
+
+
+@dataclass
+class Delta:
+    """One run's change to ``hist``: ``rows`` in the ``hist`` contract
+    to write, the stored partitions they replace whole, and the input
+    log with this run's files. ``observed`` counts the valid candle rows
+    read once ``rows`` is written."""
+
+    rows: DataFrame
+    rewrite: frozenset[str]
+    log: dict
+    files_read: int
+    observed: Observation
+
+
+def _candles(spark: SparkSession, paths: Sequence[str]) -> DataFrame:
+    """The valid candle rows of ``paths``, keyed and timed."""
+    valid, _rejects = split_valid(extract_key_columns(read_candle_csvs(spark, paths)))
+    return with_event_time(valid)
+
+
+def _stored(spark: SparkSession, data_dir: str, partitions: Sequence[str], cols: Sequence[str]) -> DataFrame:
+    """``cols`` of some partitions of a committed version, read with the
+    ``hist`` contract; they rank below every input file in the tie rule."""
+    return (
+        spark.read.schema(CONTRACTS["hist"]).option("basePath", data_dir)
+        .parquet(*(os.path.join(data_dir, p) for p in partitions))
+        .select(*cols)
+        .withColumn("source_file", F.lit(""))
+    )
+
+
+def build_serving_df(
+    spark: SparkSession, input_paths: Sequence[str], table_path: str | None = None
+) -> Delta | None:
+    """The change this run makes to the ``hist`` table at ``table_path``
+    (from scratch when None or not yet written), or None when no input
+    file is new or changed — the reference's early exit
+    (``batch_processor.py:56-59``), which now also covers a rerun."""
+    log = read_inputs(table_path) if table_path else {"files": {}, "keys": {}, "rows": 0}
+    listed = list_inputs(spark, input_paths)
+    fresh = sorted(p for p, st in listed.items() if log["files"].get(p) != st)
+    if not fresh:
+        return None
+    log = {**log, "files": {**log["files"], **{p: listed[p] for p in fresh}}}
+    cur = versioned.current_version(table_path) if table_path else None
+    data_dir = versioned.version_dir(table_path, cur) if cur is not None else None
+    # the first new candle per touched partition, which decides append or rewrite
+    first_new = {} if cur is None else dict(
+        (f"symbol={s}/timeframe={t}", lo)
+        for s, t, lo in _candles(spark, fresh).groupBy(*_KEYS).agg(F.min("timestamp_s")).collect()
+    )
+    by_partition: dict[str, list[str]] = {}
+    for p in sorted(listed):
+        by_partition.setdefault(_partition_of(p), []).append(p)
+    fresh_set = set(fresh)
+
+    def sorts_before_processed(part: str) -> bool:
+        files = [(p in fresh_set, p.rsplit("/", 1)[-1]) for p in by_partition[part]]
+        old = [n for is_new, n in files if not is_new]
+        return bool(old) and min(n for is_new, n in files if is_new) <= max(old)
+
+    stored = {p for p in first_new if p in log["keys"]}
+    overlap = {p for p in stored if first_new[p] <= log["keys"][p][0]}
+    rewrite = overlap | {p for p in stored if len(_data_files(data_dir, p)) >= MAX_PARTITION_FILES}
+    reread = sorted(
+        p for part in overlap if sorts_before_processed(part)
+        for p in by_partition[part] if p not in fresh_set
+    )
+    observed = Observation("batch")
+    parts = [
+        _candles(spark, fresh + reread)
+        .observe(observed, F.count(F.lit(1)).alias("rows"))
+        .withColumn("__out", F.lit(True))
+    ]
+    if stored - rewrite:  # append: the last 29 stored rows seed the SMA windows
+        seed = _stored(spark, data_dir, sorted(stored - rewrite), (*_KEYS, "timestamp_s", "close"))
+        newest = Window.partitionBy(*_KEYS).orderBy(F.desc("timestamp_s"))
+        parts.append(
+            seed.withColumn("__rn", F.row_number().over(newest))
+            .filter(F.col("__rn") <= _SEED).drop("__rn")
+            .withColumn("__out", F.lit(False))
+        )
+    if rewrite:
+        kept = [c for c in names("hist") if c not in ("doc_id", "sma_7", "sma_30")]
+        parts.append(_stored(spark, data_dir, sorted(rewrite), kept).withColumn("__out", F.lit(True)))
+    combined = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+    out = with_doc_id(with_sma_features(combined).filter("__out")).select(*columns("hist"))
+    return Delta(out, frozenset(rewrite), log, len(fresh) + len(reread), observed)
+
+
+def upsert_parquet(spark: SparkSession, delta: Delta, table_path: str) -> int:
+    """Commit ``delta`` as the next version of the ``hist`` table — the
+    reference's ES upsert by doc_id (``batch_processor.py:142-148``) —
+    and vacuum the previous one, so the table root holds exactly one
+    version at rest. The new rows are written by Spark; every stored
+    partition not rewritten is hard-linked in; the input log, with row
+    counts from the written files' footers, goes in before the pointer
+    flips. Returns the table's row count."""
+    require_local(table_path, "upsert_parquet")  # before any Spark work
+    log = delta.log
+    prev_keys = log["keys"]
+    cur = versioned.current_version(table_path)
+    linked = [p for p in prev_keys if p not in delta.rewrite]
+    carry = [f for p in linked for f in _data_files(versioned.version_dir(table_path, cur), p)]
+    ver = versioned.stage_version(table_path, delta.rows, _KEYS, carry)
+    data_dir = versioned.version_dir(table_path, ver)
+    carried, keys, written = set(carry), dict(prev_keys), 0
+    for p in _partitions(data_dir):
+        new = [os.path.join(data_dir, f) for f in _data_files(data_dir, p) if f not in carried]
+        if not new:
+            continue
+        rows, newest = _footer_stats(new)
+        written += rows
+        base = prev_keys.get(p) if p not in delta.rewrite else None
+        keys[p] = [newest, rows] if base is None else [max(base[0], newest), base[1] + rows]
+    log = {**log, "keys": keys, "rows": sum(r for _, r in keys.values())}
+    with open(os.path.join(data_dir, _INPUTS), "w") as f:
+        json.dump(log, f)
+    counts = dict(zip(RUN_COUNTS, (
+        delta.files_read,
+        # no row written means no valid row read, and then no metrics to wait for
+        delta.observed.get["rows"] if written else 0,
+        written,
+        len(delta.rewrite),
+        len(linked),
+    )))
+    versioned.commit_version(table_path, ver, delta.rows.schema.simpleString(), "batch", extra=counts)
     versioned.vacuum(table_path, keep_last=1)
+    return log["rows"]
 
 
 def run_batch(
     spark: SparkSession, input_paths: Sequence[str], table_path: str
 ) -> int:
     """Hourly batch job entry point (reference ``run_batch_processor.sh``
-    → ``batch_processor.py``). Returns the number of rows upserted."""
-    serving = build_serving_df(spark, input_paths)
-    if serving is None:
-        return 0
-    upsert_parquet(spark, serving, table_path)
-    return versioned.read_version(spark, table_path).count()
+    → ``batch_processor.py``). Returns the table's row count, from the
+    input log."""
+    require_local(table_path, "run_batch")
+    delta = build_serving_df(spark, input_paths, table_path)
+    if delta is None:
+        return read_inputs(table_path)["rows"]
+    return upsert_parquet(spark, delta, table_path)

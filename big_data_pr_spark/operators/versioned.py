@@ -21,6 +21,16 @@ version's rows; so does a Spark read of a partitioned table's root
 with ``recursiveFileLookup``, so Spark readers use :func:`read_version`,
 as serving does — it reads by pointer and never depends on vacuuming.
 
+Linked versions: a commit is :func:`stage_version` (the data write,
+then hard links that carry unchanged files of the current version into
+the new directory) followed by :func:`commit_version` (manifest and
+pointer); :func:`write_version` is the two with nothing carried. The
+batch ``hist`` table rewrites only the partitions a run touches and
+links the rest, so consecutive versions share most files. A linked
+file is the same inode in both directories, so vacuuming an old
+version only unlinks its names: it frees just the files no newer
+version links, and a version never changes under a reader.
+
 The streaming sketch sinks (``streaming/*_sink.py``) fold each
 micro-batch into a state table through :func:`fold_epoch`, which
 commits the epoch id with the state so a replayed epoch is a no-op.
@@ -91,6 +101,59 @@ def manifest(table_dir: str, version: int | None = None) -> dict:
         return json.load(f)
 
 
+def stage_version(
+    table_dir: str,
+    df: DataFrame,
+    partition_by: Sequence[str] = (),
+    carry: Sequence[str] = (),
+) -> int:
+    """Write the next version's data directory without publishing it;
+    returns its version number. ``df``'s rows land through one
+    distributed write (``partition_by`` lays them out as hive
+    ``col=value/`` subdirectories); each path in ``carry``, relative to
+    the current version's directory, is then hard-linked into the new
+    one, so a file that did not change carries forward without a copy
+    (same table directory, same filesystem). The write replaces a stale
+    directory of the same number, left by a crash before
+    :func:`commit_version`."""
+    require_local(table_dir, "write_version")
+    cur = current_version(table_dir)
+    ver = (cur or 0) + 1
+    data_dir = version_dir(table_dir, ver)
+    df.write.mode("overwrite").partitionBy(*partition_by).parquet(data_dir)
+    for rel in carry:
+        dst = os.path.join(data_dir, rel)
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        os.link(os.path.join(version_dir(table_dir, cur), rel), dst)
+    return ver
+
+
+def commit_version(
+    table_dir: str, ver: int, schema: str, note: str = "", extra: dict | None = None
+) -> int:
+    """Publish the staged version ``ver``: its manifest, then the one
+    atomic pointer rename. Everything the version holds — data, carried
+    links, and any ``_``-prefixed file its writer put in its directory
+    — commits with that rename or not at all."""
+    manifest = {
+        "version": ver,
+        "committed_at": time.time(),
+        "note": note,
+        "schema": schema,
+        **({"extra": extra} if extra else {}),
+    }
+    os.makedirs(os.path.join(table_dir, _MANIFESTS), exist_ok=True)
+    with open(
+        os.path.join(table_dir, _MANIFESTS, f"v{ver:06d}.json"), "w"
+    ) as f:
+        json.dump(manifest, f)
+    tmp = os.path.join(table_dir, f"{_POINTER}.tmp")
+    with open(tmp, "w") as f:
+        f.write(str(ver))
+    os.rename(tmp, os.path.join(table_dir, _POINTER))
+    return ver
+
+
 def write_version(
     df: DataFrame,
     table_dir: str,
@@ -109,27 +172,8 @@ def write_version(
     and metadata can never diverge across a crash (the Delta/Iceberg
     txn-metadata pattern). ``partition_by`` lays the version directory
     out as hive ``col=value/`` subdirectories."""
-    require_local(table_dir, "write_version")
-    os.makedirs(os.path.join(table_dir, _MANIFESTS), exist_ok=True)
-    ver = (current_version(table_dir) or 0) + 1
-    data_dir = version_dir(table_dir, ver)
-    df.write.mode("overwrite").partitionBy(*partition_by).parquet(data_dir)
-    manifest = {
-        "version": ver,
-        "committed_at": time.time(),
-        "note": note,
-        "schema": df.schema.simpleString(),
-        **({"extra": extra} if extra else {}),
-    }
-    with open(
-        os.path.join(table_dir, _MANIFESTS, f"v{ver:06d}.json"), "w"
-    ) as f:
-        json.dump(manifest, f)
-    tmp = os.path.join(table_dir, f"{_POINTER}.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(ver))
-    os.rename(tmp, os.path.join(table_dir, _POINTER))
-    return ver
+    ver = stage_version(table_dir, df, partition_by)
+    return commit_version(table_dir, ver, df.schema.simpleString(), note, extra)
 
 
 def fold_epoch(

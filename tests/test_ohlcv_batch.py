@@ -64,7 +64,7 @@ def test_filename_regex_and_validity(spark, csv_dir):
 
 
 def test_serving_build_sma_warmup_and_units(spark, csv_dir):
-    df = batch.build_serving_df(spark, [csv_dir + "/*.csv"])
+    df = batch.build_serving_df(spark, [csv_dir + "/*.csv"]).rows
     eth = df.filter(F.col("symbol") == "ETH_USDT").orderBy("timestamp_dt").collect()
     assert len(eth) == 4
     # warm-up: sma_7 of row i averages rows 0..i (closes 50.5, 51.5, ...)
