@@ -103,7 +103,9 @@ class ServingBackend:
     ``historical_data`` 404s (its upstream route 404s on a missing ES
     index — app.py:190). ``now_fn`` gives "now" as a UTC ``datetime``,
     read once per request by the chart and history ranges
-    (``current_timestamp()``); tests pin it.
+    (``current_timestamp()``); tests pin it. ``artifacts`` holds each
+    forecast symbol's unpickled (model, scaler) for as long as neither
+    file changes.
     """
 
     def __init__(
@@ -119,6 +121,9 @@ class ServingBackend:
         self.snapshots: dict[str, tuple[int, object]] = {}  # table -> (version, snapshot)
         self.locks = {t: threading.Lock() for t in self.paths}
         self.artifacts_dir = artifacts_dir
+        # symbol -> ((path, mtime_ns, size) of both files, (model, scaler))
+        self.artifacts: dict[str, tuple[tuple, tuple]] = {}
+        self.artifacts_lock = threading.Lock()
         self.now_fn = now_fn or (lambda: datetime.now(timezone.utc))
 
     def _snapshot(self, table: str) -> tuple[int, object] | None:
@@ -153,6 +158,17 @@ class ServingBackend:
                 raise
         snap = self._snapshot(table)
         return None if snap is None else fn(snap[1])
+
+    def _artifacts(self, symbol: str, paths: tuple[str, str]) -> tuple:
+        """(model, scaler) of ``symbol``, unpickled again only when the
+        path, mtime or size of either file changed."""
+        stamp = tuple((p, st.st_mtime_ns, st.st_size) for p in paths for st in [os.stat(p)])
+        with self.artifacts_lock:
+            cached = self.artifacts.get(symbol)
+            if cached is None or cached[0] != stamp:
+                loaded = forecast.load_symbol_artifacts(self.artifacts_dir, symbol)
+                cached = self.artifacts[symbol] = (stamp, loaded)
+            return cached[1]
 
     # -- dropdown data (app.py:46-83) ---------------------------------
     def symbols(self) -> list[str]:
@@ -258,7 +274,7 @@ class ServingBackend:
             return {"error": f"Model for {symbol_req} not found."}, 404
         if not os.path.exists(scaler_pkl):
             return {"error": f"Scaler for {symbol_req} not found."}, 404
-        model, scaler = forecast.load_symbol_artifacts(self.artifacts_dir, symbol_req)
+        model, scaler = self._artifacts(symbol_req, (model_pkl, scaler_pkl))
         try:
             preds = forecast.forecast_from_hist(
                 lambda build: self.query("hist", build), model, scaler,

@@ -115,12 +115,19 @@ def stage_version(
     one, so a file that did not change carries forward without a copy
     (same table directory, same filesystem). The write replaces a stale
     directory of the same number, left by a crash before
-    :func:`commit_version`."""
+    :func:`commit_version`, and leaves no ``_SUCCESS`` marker."""
     require_local(table_dir, "write_version")
     cur = current_version(table_dir)
     ver = (cur or 0) + 1
     data_dir = version_dir(table_dir, ver)
-    df.write.mode("overwrite").partitionBy(*partition_by).parquet(data_dir)
+    # no ``_SUCCESS`` marker: the pointer is the commit, and without
+    # native Hadoop libraries each file created costs a ``chmod`` process
+    (
+        df.write.mode("overwrite")
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        .partitionBy(*partition_by)
+        .parquet(data_dir)
+    )
     for rel in carry:
         dst = os.path.join(data_dir, rel)
         os.makedirs(os.path.dirname(dst), exist_ok=True)

@@ -196,6 +196,102 @@ def test_incremental_equals_full_recompute(spark, dirs, tmp_path):
     assert batch.read_inputs(table)["rows"] == batch.read_inputs(scratch)["rows"] == len(_rows(spark, table))
 
 
+def test_append_cycle_is_two_jobs_and_reads_no_stored_file(spark, dirs, tmp_path, monkeypatch):
+    """An hourly append is one query over the new files, seeded from the
+    input log: at most two Spark jobs (with AQE, the shuffle stage and
+    the write) and no scan of the stored partitions."""
+    hist, upd, globs = dirs
+    for sym in ("BTC_USDT", "ETH_USDT"):
+        _csv(hist / f"{sym}_1h.csv", {i: 10.0 + (i * 7) % 11 for i in range(40)})
+    table = str(tmp_path / "hist")
+    batch.run_batch(spark, globs, table)
+    _update(upd, "000000", {40: 50.0})
+    _update(upd, "000000", {40: 60.0, 41: 61.0}, sym="ETH_USDT")
+    stored_calls = []
+    stored = batch._stored
+
+    def spy(spark_, data_dir, partitions, cols):
+        stored_calls.append(list(partitions))
+        return stored(spark_, data_dir, partitions, cols)
+
+    monkeypatch.setattr(batch, "_stored", spy)
+    sc = spark.sparkContext
+    sc.setJobGroup("batch-append", "append")
+    try:
+        assert batch.run_batch(spark, globs, table) == 83
+        jobs = list(sc.statusTracker().getJobIdsForGroup("batch-append"))
+    finally:
+        sc.setJobGroup("", "")
+    assert len(jobs) <= 2, jobs
+    assert stored_calls == []
+    assert _extra(table)["partitions_rewritten"] == 0
+    monkeypatch.undo()
+    scratch = str(tmp_path / "scratch")
+    batch.run_batch(spark, globs, scratch)
+    _assert_same_table(spark, table, scratch)
+    assert batch.read_inputs(table)["tails"] == batch.read_inputs(scratch)["tails"]
+
+
+def test_a_log_without_tails_appends_like_a_full_recompute(spark, dirs, tmp_path):
+    """A log written before it carried the SMA seed: the tails come from
+    the stored files, and the next commit logs them."""
+    hist, upd, globs = dirs
+    _csv(hist / "BTC_USDT_1h.csv", {i: 100.0 + (i * 5) % 9 for i in range(45)})
+    _csv(hist / "ETH_USDT_1h.csv", {i: 20.0 + i for i in range(10)})
+    table = str(tmp_path / "hist")
+    batch.run_batch(spark, globs, table)
+    log_path = os.path.join(versioned.version_dir(table, 1), "_inputs.json")
+    with open(log_path) as f:
+        log = json.load(f)
+    tails = log.pop("tails")
+    assert len(tails[BTC]) == 29 and len(tails[ETH]) == 10
+    with open(log_path, "w") as f:
+        json.dump(log, f)
+    assert batch.read_inputs(table)["tails"] == tails
+    _update(upd, "000000", {45: 7.0, 46: 8.0})
+    assert batch.run_batch(spark, globs, table) == 57
+    assert _extra(table)["files_read"] == 1 and _extra(table)["partitions_rewritten"] == 0
+    scratch = str(tmp_path / "scratch")
+    batch.run_batch(spark, globs, scratch)
+    _assert_same_table(spark, table, scratch)
+    with open(os.path.join(versioned.version_dir(table, 2), "_inputs.json")) as f:
+        assert json.load(f)["tails"] == batch.read_inputs(scratch)["tails"]
+
+
+def test_overlap_found_after_staging_commits_one_version(spark, dirs, tmp_path, monkeypatch):
+    """A re-sent candle is seen only in the staged append's files: that
+    attempt is dropped unpublished and the partition is rewritten, so
+    the table gains one version and one manifest."""
+    hist, upd, globs = dirs
+    _csv(hist / "BTC_USDT_1h.csv", {i: 10.0 + i for i in range(40)})
+    _csv(hist / "ETH_USDT_1h.csv", {i: 20.0 + i for i in range(40)})
+    table = str(tmp_path / "hist")
+    batch.run_batch(spark, globs, table)
+    eth = _files(table, ETH)
+    _update(upd, "000000", {38: 0.5, 40: 50.0})
+    _update(upd, "000000", {40: 60.0}, sym="ETH_USDT")
+    staged = []
+    stage = versioned.stage_version
+
+    def spy(*a, **kw):
+        staged.append(stage(*a, **kw))
+        return staged[-1]
+
+    monkeypatch.setattr(versioned, "stage_version", spy)
+    assert batch.run_batch(spark, globs, table) == 82
+    assert staged == [2, 2]  # the append, then the rewrite in its place
+    assert [m["version"] for m in versioned.versions(table)] == [1, 2]
+    assert len(os.listdir(os.path.join(table, "_versions"))) == 2
+    assert _extra(table)["partitions_rewritten"] == 1 and _extra(table)["partitions_linked"] == 1
+    assert set(eth) < set(_files(table, ETH))  # ETH stays an append: its old files linked
+    assert len(_files(table, BTC)) == 1
+    monkeypatch.undo()
+    scratch = str(tmp_path / "scratch")
+    batch.run_batch(spark, globs, scratch)
+    _assert_same_table(spark, table, scratch)
+    assert batch.read_inputs(table)["tails"] == batch.read_inputs(scratch)["tails"]
+
+
 def test_crash_before_the_pointer_flip_leaves_the_previous_version(spark, dirs, tmp_path, monkeypatch):
     hist, upd, globs = dirs
     _csv(hist / "BTC_USDT_1h.csv", {i: 10.0 + i for i in range(40)})
@@ -226,7 +322,7 @@ def test_crash_before_the_pointer_flip_leaves_the_previous_version(spark, dirs, 
 
 def test_a_version_without_an_input_log_is_read_from_its_footers(spark, dirs, tmp_path):
     """A table committed before the input log existed: every file counts
-    as new, and the stored rows come from the parquet footers."""
+    as new, and the stored keys and tails come from the parquet files."""
     hist, upd, globs = dirs
     _csv(hist / "BTC_USDT_1h.csv", {i: 10.0 + i for i in range(40)})
     table = str(tmp_path / "hist")

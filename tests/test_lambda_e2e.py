@@ -12,6 +12,8 @@ from __future__ import annotations
 
 import json
 import os
+import sys
+import threading
 import time
 from datetime import datetime, timezone
 import urllib.error
@@ -217,6 +219,74 @@ def test_cli_forecast_reads_the_batch_table(lambda_tables, tmp_path, capsys, mon
                  "--hist", lambda_tables["hist"], "--steps", "24"]) == 0
     got = [json.loads(x)["predicted_price"] for x in capsys.readouterr().out.splitlines()]
     assert got == pytest.approx(_replay("ETH_USDT"), abs=0.006)
+
+
+def test_forecast_artifacts_load_once_per_file_version(lambda_tables, tmp_path, monkeypatch):
+    """Two requests unpickle the model and scaler once; touching either
+    file loads both again."""
+    loads = []
+
+    def model(p):
+        loads.append(p)
+        return _Model(), {}
+
+    def scaler(p):
+        loads.append(p)
+        return _scaler("ETH_USDT")
+
+    monkeypatch.setattr(xgb_ubjson, "load_reference_regressor", model)
+    monkeypatch.setattr(artifacts, "load_minmax_scaler", scaler)
+    for name in ("ETH_USDT_xgboost_model.pkl", "ETH_USDT_scaler.pkl"):
+        (tmp_path / name).write_bytes(b"synthetic")
+    backend = ServingBackend(hist=lambda_tables["hist"], artifacts_dir=str(tmp_path))
+    first = backend.predict("ETH_USDT_1h")
+    assert first[1] == 200
+    assert backend.predict("ETH_USDT_1h") == first
+    assert len(loads) == 2
+    os.utime(tmp_path / "ETH_USDT_scaler.pkl", ns=(1, 1))
+    assert backend.predict("ETH_USDT_1h") == first
+    assert len(loads) == 4
+    assert backend.predict("ETH_USDT_1h") == first
+    assert len(loads) == 4
+
+
+def test_concurrent_forecasts_load_the_artifacts_once(lambda_tables, tmp_path, monkeypatch):
+    """More request threads than cores, released together, switching
+    every 10 µs, against a loader that takes 50 ms (as a file read
+    would): the artifacts are still loaded once, and every request
+    answers."""
+    loads = []
+
+    def model(p):
+        loads.append(p)
+        time.sleep(0.05)
+        return _Model(), {}
+
+    monkeypatch.setattr(xgb_ubjson, "load_reference_regressor", model)
+    monkeypatch.setattr(artifacts, "load_minmax_scaler", lambda _p: _scaler("ETH_USDT"))
+    for name in ("ETH_USDT_xgboost_model.pkl", "ETH_USDT_scaler.pkl"):
+        (tmp_path / name).write_bytes(b"synthetic")
+    backend = ServingBackend(hist=lambda_tables["hist"], artifacts_dir=str(tmp_path))
+    n = 2 * (os.cpu_count() or 1)
+    start, codes = threading.Barrier(n), []
+
+    def client():
+        start.wait(timeout=60)
+        codes.extend(backend.predict("ETH_USDT_1h")[1] for _ in range(3))
+
+    threads = [threading.Thread(target=client) for _ in range(n)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert codes == [200] * 3 * n
+    assert len(loads) == 1
 
 
 def test_forecast_short_history_reports_found_need(lambda_tables, tmp_path, capsys, monkeypatch):

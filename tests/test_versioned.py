@@ -36,6 +36,16 @@ def test_write_read_and_time_travel(spark, tdir):
     assert metas[0]["note"] == "load"
 
 
+def test_committed_version_has_no_success_marker(spark, tdir):
+    """The pointer is the commit: a version directory, flat or
+    partitioned, holds data files only."""
+    versioned.write_version(_df(spark, [(1, "a")]), tdir)
+    versioned.write_version(_df(spark, [(1, "a"), (2, "b")]), tdir, partition_by=["k"])
+    for ver in (1, 2):
+        found = [f for _, _, fs in os.walk(versioned.version_dir(tdir, ver)) for f in fs]
+        assert found and not any("SUCCESS" in f for f in found), found
+
+
 def test_pinned_reader_survives_concurrent_commit(spark, tdir):
     versioned.write_version(_df(spark, [(1, "a")]), tdir)
     pinned = versioned.read_version(spark, tdir)  # resolves pointer NOW
